@@ -1,5 +1,10 @@
-"""Incremental table statistics: per-FILE NDV sketches persisted beside
-the table, merged per snapshot on demand.
+"""Incremental table statistics: the per-FILE stats planes (HLL and KMV
+NDV sketches, dictionaries, pair dictionaries, histograms, top-k
+summaries and row samples; bloom filters live in bloom.py), persisted
+beside the table and merged per snapshot on demand.  Where each plane's
+rows live, and how they are probed, read and garbage-collected, is
+stats_store.py's job (its docstring holds the layout table); this
+module keeps each plane's per-file aggregation and its consumers.
 
 Manifest metrics (min/max/null counts — ref: api/.../Metrics.java:32-44,
 collected at write by stats.py) come free from footers, but NDV — the
@@ -7,8 +12,7 @@ statistic planners want most for join sizing and the one users ask of a
 corpus ("how many distinct users/tokens/domains") — cannot be derived
 from bounds.  This plane is the AnalyzeTable analog of the modern
 format's stats files (absent from the 0.9-era reference, whose metrics
-stop at bounds): one HLL sketch per (data file, column), persisted as
-parquet under ``<location>/stats/<col>/``.
+stop at bounds): one HLL sketch per (data file, column).
 
 Why per FILE and not per snapshot: data files are immutable, so a file's
 sketch never goes stale — any commit (append, CoW DML, compaction) only
@@ -27,30 +31,44 @@ driver work is O(live files), no data I/O.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from linkedin_iceberg_spark.catalog import manifests as M
+from linkedin_iceberg_spark.catalog import stats_store as S
+from linkedin_iceberg_spark.catalog.stats_store import SAMPLE_SALT
 
 
-def _stats_dir(table, col: str) -> str:
-    # keyed by FIELD ID like every other stats plane (r9): rename-safe,
-    # and a NEW column reusing a dropped name never sees the old
-    # column's sketches (name-keyed stores silently served stale NDV)
-    return os.path.join(table.location, "stats",
-                        str(table.schema.id_for_name(col)))
+def _field(table, col: str, types=None, what: str = ""):
+    """The top-level field named ``col``; with ``types``, also require a
+    primitive type the ``what`` plane supports."""
+    f = next((f_ for f_ in table.schema.fields if f_.name == col), None)
+    if f is None:
+        raise ValueError(f"no such column {col!r}")
+    if types is not None and not (isinstance(f.type, str)
+                                  and f.type in types):
+        raise ValueError(
+            f"{what} stats support {sorted(types)} columns; "
+            f"{col!r} is {f.type!r}")
+    return f
 
 
-def column_source(table, col: str, paths: list, entries: list = None,
+def _check_columns(table, columns: list) -> None:
+    names = set(table.schema.column_names())
+    for c in columns:
+        if c not in names:
+            raise ValueError(f"no such column {c!r}")
+
+
+def column_source(table, cols, paths: list, entries: list = None,
                   with_pos: bool = False):
-    """One ``(file_path, v)`` row per data row of ``paths``, with ``v``
-    the column's value read under each file's WRITTEN name and type
+    """One ``(file_path, <alias>...)`` row per data row of ``paths``.
+    ``cols`` maps output alias -> column name (a bare name reads as
+    ``{"v": name}``); every column of one row comes from the SAME data
+    row, its value read under each file's WRITTEN name and type
     (resolved through the file's schema_id) and cast to the CURRENT
-    engine type.  With ``with_pos`` a third column ``pos`` carries the
-    row's in-file position (``_metadata.row_index`` — the same
-    ROW_POSITION number the reserved ``_pos`` column serves), for
-    planes whose per-row hash must be replayable (the sample plane).
+    engine type.  With ``with_pos`` a ``pos`` column carries the row's
+    in-file position (``_metadata.row_index`` — the same ROW_POSITION
+    number the reserved ``_pos`` column serves), for planes whose
+    per-row hash must be replayable (the sample plane).
 
     Every stats-plane build reads through here: a plain
     ``read.schema(current).parquet(...)`` silently nulls out files
@@ -61,17 +79,19 @@ def column_source(table, col: str, paths: list, entries: list = None,
     xxhash64(long)).  Only the store path was field-id keyed; this
     makes the build side field-id keyed too, the same ``rev_by_sid``
     recipe colocated_groupby uses.  Files whose written schema lacks
-    the field genuinely read as NULL for every row — correct, and kept
-    (row counts matter to the histogram's NULL group).
-    """
+    a field genuinely read it as NULL for every row — correct, and kept
+    (row counts matter to the histogram's NULL group).  ORC/Avro data
+    files route through the whole-file readers, whose per-file row
+    counter is exact, so even the position-hashed planes stay
+    format-agnostic (r10)."""
     from pyspark.sql import types as T
 
     from linkedin_iceberg_spark.schema import type_to_spark
 
-    spark = table.spark
     md = table.metadata
-    f = next(f_ for f_ in table.schema.fields if f_.name == col)
-    cur_stype = type_to_spark(f.type)
+    if isinstance(cols, str):
+        cols = {"v": cols}
+    fields = {a: _field(table, c) for a, c in cols.items()}
     if entries is None:
         entries, _ = table._live_data_and_deletes()
     sid_by_path = {e.data_file.file_path: e.data_file.schema_id
@@ -80,114 +100,90 @@ def column_source(table, col: str, paths: list, entries: list = None,
     for p in paths:
         by_sid.setdefault(sid_by_path.get(p, md.current_schema_id),
                           []).append(p)
-    fp = F.regexp_replace(F.col("_metadata.file_path"),
-                          "^file:", "").alias("file_path")
-    extra = ([F.col("_metadata.row_index").alias("pos")]
-             if with_pos else [])
+    def pos(c):
+        return [F.col(c).alias("pos")] if with_pos else []
+
     frames = []
     for sid in sorted(by_sid):
         ps = sorted(by_sid[sid])
         written = md.schema_by_id(sid)
-        wname = written.name_for_id(f.field_id)
+        present = [written.find_field(f.field_id)
+                   for f in fields.values()
+                   if written.name_for_id(f.field_id) is not None]
+        sel = []
+        for a, f in fields.items():
+            wname = written.name_for_id(f.field_id)
+            v = F.lit(None) if wname is None else F.col(wname)
+            sel.append(v.cast(type_to_spark(f.type)).alias(a))
         pq = [p for p in ps if p.endswith(".parquet")]
         other = [p for p in ps if not p.endswith(".parquet")]
-        if pq and wname is None:
-            # field absent when these files were written: all rows NULL.
-            # Read one real column only to preserve per-file row counts.
-            w0 = written.fields[0]
-            rschema = T.StructType([T.StructField(
-                w0.name, type_to_spark(w0.type), True)])
-            frames.append(spark.read.schema(rschema).parquet(*pq)
-                          .select(fp, F.lit(None).cast(cur_stype)
-                                  .alias("v"), *extra))
-        elif pq:
-            wtype = written.find_field(f.field_id).type
-            rschema = T.StructType([T.StructField(
-                wname, type_to_spark(wtype), True)])
-            frames.append(spark.read.schema(rschema).parquet(*pq)
-                          .select(fp, F.col(wname).cast(cur_stype)
-                                  .alias("v"), *extra))
+        if pq:
+            # fields absent when these files were written read as NULL;
+            # one real column keeps the per-file row counts
+            rschema = T.StructType([
+                T.StructField(w.name, type_to_spark(w.type), True)
+                for w in present or [written.fields[0]]])
+            frames.append(table.spark.read.schema(rschema).parquet(*pq)
+                          .select(F.regexp_replace(
+                              F.col("_metadata.file_path"), "^file:", "")
+                              .alias("file_path"), *sel,
+                              *pos("_metadata.row_index")))
         if other:
-            # ORC/Avro data files route through the whole-file readers
-            # (r10): spark.read.parquet would crash on them, and the
-            # per-file row counter there is exact, so even the
-            # position-hashed planes stay format-agnostic
-            frames.append(_other_format_source(
-                spark, written, wname, f, cur_stype, other, with_pos))
+            frames.append(_other_format_rows(table.spark, written, present,
+                                             other)
+                          .select(F.col("_file").alias("file_path"), *sel,
+                                  *pos("_pos")))
+    return _union(frames)
+
+
+def _union(frames: list, **kw):
     out = frames[0]
     for d_ in frames[1:]:
-        out = out.unionByName(d_)
+        out = out.unionByName(d_, **kw)
     return out
 
 
-def _other_format_source(spark, written, wname, f, cur_stype,
-                         paths: list, with_pos: bool):
-    """(file_path, v[, pos]) over ORC/Avro data files via the
-    whole-file pyarrow/codec readers (sources/orc_spark.py,
-    avro_spark.py) — ORC reads prune to the one physical column, Avro
-    decodes rows with the full written schema (the pure-Python codec
-    has no column projection)."""
+def _other_format_rows(spark, written, pruned_fields: list,
+                       paths: list):
+    """Raw (written columns, _file, _pos) rows over ORC/Avro files —
+    ORC physically prunes to ``pruned_fields`` (one real column when
+    empty, for row counts), Avro decodes the full written schema (the
+    pure-Python codec has no column projection)."""
     from linkedin_iceberg_spark.schema import Schema as _S
-    frames = []
     orc = [p for p in paths if p.endswith(".orc")]
     avro = [p for p in paths if p.endswith(".avro")]
     other = [p for p in paths if not (p.endswith(".orc")
                                       or p.endswith(".avro"))]
     if other:
         raise ValueError(f"unsupported data file format: {other[0]!r}")
-    vcol = (F.col(wname).cast(cur_stype) if wname is not None
-            else F.lit(None).cast(cur_stype)).alias("v")
-    sel = [F.col("_file").alias("file_path"), vcol] \
-        + ([F.col("_pos").alias("pos")] if with_pos else [])
+    frames = []
     if orc:
         from linkedin_iceberg_spark.sources.orc_spark import (
             read_orc_files)
-        # pruned one-field schema: the reader physically decodes only
-        # this column (plus an empty read for row counts when absent)
-        pruned = _S([written.find_field(f.field_id)]
-                    if wname is not None else [written.fields[0]],
+        pruned = _S(pruned_fields or [written.fields[0]],
                     schema_id=written.schema_id)
-        frames.append(read_orc_files(spark, orc, pruned).select(*sel))
+        frames.append(read_orc_files(spark, orc, pruned))
     if avro:
         from linkedin_iceberg_spark.sources.avro_spark import (
             read_avro_files)
         frames.append(read_avro_files(spark, avro, written,
                                       with_file_col=True,
-                                      with_pos_col=True).select(*sel))
-    out = frames[0]
-    for d_ in frames[1:]:
-        out = out.unionByName(d_)
-    return out
+                                      with_pos_col=True))
+    return _union(frames, allowMissingColumns=True)
 
 
 def analyze_table(table, columns: list) -> dict:
     """Bring the per-file sketch store up to date for ``columns``:
     sketch only the live data files missing from each column's store.
     Returns {column: files_sketched_now}."""
-    names = set(table.schema.column_names())
-    for c in columns:
-        if c not in names:
-            raise ValueError(f"no such column {c!r}")
+    _check_columns(table, columns)
     entries, _ = table._live_data_and_deletes()
-    live = {e.data_file.file_path for e in entries}
-    out = {}
-    for col in columns:
-        d = _stats_dir(table, col)
-        have = set()
-        if os.path.isdir(d) and any(
-                f.endswith(".parquet") for f in os.listdir(d)):
-            have = {r["file_path"] for r in
-                    table.spark.read.parquet(d)
-                    .select("file_path").distinct().collect()}
-        todo = sorted(live - have)
-        out[col] = len(todo)
-        if not todo:
-            continue
-        sketches = (column_source(table, col, todo, entries)
-                    .groupBy("file_path")
-                    .agg(F.hll_sketch_agg("v").alias("sketch")))
-        sketches.write.mode("append").parquet(d)
-    return out
+    return {col: S.store(table, "hll", table.schema.id_for_name(col))
+            .build(entries, lambda todo, col=col: (
+                column_source(table, col, todo, entries)
+                .groupBy("file_path")
+                .agg(F.hll_sketch_agg("v").alias("sketch"))))
+            for col in columns}
 
 
 def suggest_broadcast(table, threshold_bytes: int = None,
@@ -245,21 +241,14 @@ def column_stats(table, col: str) -> dict:
     metrics — no data I/O at all for those."""
     entries, delete_entries = table._live_data_and_deletes()
     live = {e.data_file.file_path for e in entries}
-    d = _stats_dir(table, col)
-    if not os.path.isdir(d):
+    store, covered = S.store(
+        table, "hll", table.schema.id_for_name(col)).cover(live)
+    if store is None:
         raise ValueError(f"no stats for {col!r}; run analyze_table first")
-    # semi-join, NOT isin: the live set is O(files) — at 1M files an
-    # isin literal list is a codegen bomb, while a parallelized frame
-    # joins fine (and AQE broadcasts it when small)
-    live_df = table.spark.createDataFrame(
-        [(p,) for p in sorted(live)], "file_path string")
-    store = table.spark.read.parquet(d) \
-        .join(live_df, "file_path", "left_semi")
-    covered = store.select("file_path").distinct().count()
-    if covered < len(live):
+    if len(covered) < len(live):
         raise ValueError(
-            f"stats cover {covered}/{len(live)} live files for {col!r}; "
-            "run analyze_table to sketch the missing tail")
+            f"stats cover {len(covered)}/{len(live)} live files for "
+            f"{col!r}; run analyze_table to sketch the missing tail")
     ndv = store.agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("ndv")) \
         .collect()[0]["ndv"]
@@ -288,14 +277,6 @@ def column_stats(table, col: str) -> dict:
 
 KMV_DEFAULT_K = 256
 _KMV_SCALE = 1 << 60  # hash space: 60-bit md5-hex prefixes
-
-
-def _kmv_dir(table, col: str, k: int) -> str:
-    # k is part of the identity: a bottom-256 store cannot serve k=512.
-    # FIELD-ID keyed (r9): rename-safe, re-added names never inherit
-    # the dropped column's hashes
-    return os.path.join(table.location, "stats_kmv",
-                        str(table.schema.id_for_name(col)), f"k={k}")
 
 
 def _kmv_hash(col):
@@ -328,25 +309,10 @@ def analyze_table_kmv(table, columns: list, k: int = KMV_DEFAULT_K) -> dict:
     external SQL engine reproduces exactly.  Returns
     {column: files_sketched_now}."""
     from pyspark.sql.window import Window as W
-    names = set(table.schema.column_names())
-    for c in columns:
-        if c not in names:
-            raise ValueError(f"no such column {c!r}")
+    _check_columns(table, columns)
     entries, _ = table._live_data_and_deletes()
-    live = {e.data_file.file_path for e in entries}
-    out = {}
-    for col in columns:
-        d = _kmv_dir(table, col, k)
-        have = set()
-        if os.path.isdir(d) and any(
-                f.endswith(".parquet") for f in os.listdir(d)):
-            have = {r["file_path"] for r in
-                    table.spark.read.parquet(d)
-                    .select("file_path").distinct().collect()}
-        todo = sorted(live - have)
-        out[col] = len(todo)
-        if not todo:
-            continue
+
+    def make(todo, col):
         src = (column_source(table, col, todo, entries)
                .select("file_path", _kmv_hash("v").alias("h"))
                .where(F.col("h").isNotNull())
@@ -357,15 +323,21 @@ def analyze_table_kmv(table, columns: list, k: int = KMV_DEFAULT_K) -> dict:
         w = W.partitionBy("file_path").orderBy("h")
         bk = (src.withColumn("_rk", F.row_number().over(w))
               .filter(F.col("_rk") <= k).select("file_path", "h"))
-        paths_df = table.spark.createDataFrame(
-            [(p,) for p in todo], "file_path string")
-        empties = (paths_df
-                   .join(bk.select("file_path").distinct(),
-                         "file_path", "left_anti")
-                   .select("file_path",
-                           F.lit(None).cast("long").alias("h")))
-        bk.unionByName(empties).write.mode("append").parquet(d)
-    return out
+        return bk.unionByName(_markers(table, todo, bk,
+                                       h=F.lit(None).cast("long")))
+
+    return {col: S.store(table, "kmv", table.schema.id_for_name(col), k=k)
+            .build(entries, lambda todo, col=col: make(todo, col))
+            for col in columns}
+
+
+def _markers(table, todo: list, built, **cols):
+    """Marker rows ``(file_path, **cols)`` for the ``todo`` files with no
+    row in ``built`` — recorded so coverage sees them without a rescan."""
+    return (S.paths_frame(table.spark, todo)
+            .join(built.select("file_path").distinct(), "file_path",
+                  "left_anti")
+            .select("file_path", *[c.alias(n) for n, c in cols.items()]))
 
 
 def kmv_estimate_mk(m: int, hk, k: int) -> int:
@@ -415,11 +387,29 @@ DICT_DEFAULT_MAX_NDV = 1024
 _DICT_TYPES = {"int", "long", "string", "boolean", "date"}
 
 
-def _dict_dir(table, field_id: int) -> str:
-    # keyed by FIELD ID, not name: rename-safe (a renamed column keeps
-    # its dictionary; a NEW column reusing a dropped name never sees the
-    # old column's store)
-    return os.path.join(table.location, "stats_dict", str(field_id))
+def _capped_sets(table, todo: list, src, item, cap: int):
+    """``(file_path, n, packed)`` per ``todo`` file: ``n`` the file's
+    count of ``src`` rows (one per distinct item; NULL when it has
+    none), ``packed`` the sorted set of ``item`` for files with
+    ``n <= cap`` (the semi-join keeps collect_set bounded by the cap)."""
+    counts = src.groupBy("file_path").agg(F.count("*").alias("n"))
+    ok = counts.filter(F.col("n") <= cap).select("file_path")
+    vals = (src.join(ok, "file_path", "left_semi")
+            .groupBy("file_path")
+            .agg(F.sort_array(F.collect_set(item)).alias("packed")))
+    return (S.paths_frame(table.spark, todo)
+            .join(counts, "file_path", "left")
+            .join(vals, "file_path", "left"))
+
+
+def _capped(value, elem_type, cap: int):
+    """A `_capped_sets` array column with the store markers: EMPTY for a
+    file with no item, NULL for an over-cap file."""
+    from pyspark.sql import types as T
+    arr = T.ArrayType(elem_type)
+    return (F.when(F.col("n").isNull(), F.array().cast(arr))
+            .when(F.col("n") > cap, F.lit(None).cast(arr))
+            .otherwise(value))
 
 
 def analyze_dictionary(table, col: str,
@@ -442,53 +432,19 @@ def analyze_dictionary(table, col: str,
     planning (plan_files -> dictionary_prune) consults the store for
     top-level eq/IN conjuncts automatically.  Returns the number of
     files analyzed now."""
-    f = next((f for f in table.schema.fields if f.name == col), None)
-    if f is None:
-        raise ValueError(f"no such column {col!r}")
-    if not (isinstance(f.type, str) and f.type in _DICT_TYPES):
-        raise ValueError(
-            f"dictionary stats support {sorted(_DICT_TYPES)} columns; "
-            f"{col!r} is {f.type!r}")
-    spark = table.spark
-    stype = next(sf.dataType for sf in table.schema.to_spark().fields
-                 if sf.name == col)
-    from pyspark.sql import types as T
-    arr = T.ArrayType(stype)
-    d = _dict_dir(table, f.field_id)
+    from linkedin_iceberg_spark.schema import type_to_spark
+    f = _field(table, col, _DICT_TYPES, "dictionary")
     entries, _ = table._live_data_and_deletes()
-    live = {e.data_file.file_path for e in entries}
-    have = set()
-    if os.path.isdir(d) and any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        have = {r["file_path"] for r in
-                spark.read.parquet(d)
-                .select("file_path").distinct().collect()}
-    todo = sorted(live - have)
-    if not todo:
-        return 0
-    src = (column_source(table, col, todo, entries)
-           .where(F.col("v").isNotNull())
-           .distinct())
-    counts = src.groupBy("file_path").agg(F.count("*").alias("n"))
-    # only under-cap files ever materialize a value list (the semi-join
-    # keeps collect_set bounded by max_ndv per group)
-    ok = counts.filter(F.col("n") <= max_ndv).select("file_path")
-    vals = (src.join(ok, "file_path", "left_semi")
-            .groupBy("file_path")
-            .agg(F.sort_array(F.collect_set("v")).alias("values")))
-    paths_df = spark.createDataFrame([(p,) for p in todo],
-                                     "file_path string")
-    merged = (paths_df
-              .join(counts, "file_path", "left")
-              .join(vals, "file_path", "left")
-              .select("file_path",
-                      F.when(F.col("n").isNull(),
-                             F.array().cast(arr))          # all-NULL file
-                      .when(F.col("n") > max_ndv,
-                            F.lit(None).cast(arr))         # overflow
-                      .otherwise(F.col("values")).alias("values")))
-    merged.write.mode("append").parquet(d)
-    return len(todo)
+
+    def make(todo):
+        src = (column_source(table, col, todo, entries)
+               .where(F.col("v").isNotNull())
+               .distinct())
+        return (_capped_sets(table, todo, src, "v", max_ndv)
+                .select("file_path", _capped(F.col("packed"),
+                                             type_to_spark(f.type),
+                                             max_ndv).alias("values")))
+    return S.store(table, "dict", f.field_id).build(entries, make)
 
 
 PAIR_DICT_DEFAULT_MAX_NDV = 4096
@@ -498,37 +454,10 @@ PAIR_DICT_DEFAULT_MAX_NDV = 4096
 PAIR_PROBE_MAX_LITERALS = 200
 
 
-def _pair_dir(table, fid_lo: int, fid_hi: int) -> str:
-    # field-id keyed and order-normalized: rename-safe, and one store
-    # serves the conjunction regardless of how the WHERE spells it.
-    # r11: the two hashed ENGINE TYPES are part of the key — xxhash64
-    # is not stable across int->long promotion (the JVM hashes the
-    # physical width), so a store built pre-promotion never overlaps
-    # post-promotion literal hashes and would wrongly prune every file
-    # with a concrete hash set.  Type-keying makes promotion invalidate
-    # the store naturally: the probe finds nothing under the new types
-    # (keeps all files — sound) and the next build lands fresh.
-    t_lo = next((f.type for f in table.schema.fields
-                 if f.field_id == fid_lo), "x")
-    t_hi = next((f.type for f in table.schema.fields
-                 if f.field_id == fid_hi), "x")
-    return os.path.join(table.location, "stats_dict_pair",
-                        f"{fid_lo}_{fid_hi}__{t_lo}_{t_hi}")
-
-
 def _pair_fields(table, cols: list):
     """Resolve + canonically order (by field id) the two columns."""
-    fields = []
-    for col in cols:
-        f = next((f_ for f_ in table.schema.fields if f_.name == col),
-                 None)
-        if f is None:
-            raise ValueError(f"no such column {col!r}")
-        if not (isinstance(f.type, str) and f.type in _DICT_TYPES):
-            raise ValueError(
-                f"pair dictionary stats support {sorted(_DICT_TYPES)} "
-                f"columns; {col!r} is {f.type!r}")
-        fields.append(f)
+    fields = [_field(table, c, _DICT_TYPES, "pair dictionary")
+              for c in cols]
     if len(fields) != 2 or fields[0].field_id == fields[1].field_id:
         raise ValueError("exactly two distinct columns required")
     return sorted(fields, key=lambda f: f.field_id)
@@ -555,7 +484,7 @@ def analyze_dictionary_pair(table, cols: list,
     CURRENT engine types via each file's WRITTEN name/type (the
     column_source discipline), so renames never split the hash space;
     type PROMOTION does (xxhash64(int) != xxhash64(long)), which is why
-    the store directory is keyed by the hashed types (`_pair_dir`) —
+    the store directory is keyed by the hashed types (stats_store) —
     promotion orphans the old store and the next build starts fresh
     under the new key.  Returns files analyzed now.
 
@@ -564,98 +493,38 @@ def analyze_dictionary_pair(table, cols: list,
     store is one 8-byte hash per distinct pair per file."""
     from pyspark.sql import types as T
 
-    from linkedin_iceberg_spark.schema import type_to_spark
-
     f_lo, f_hi = _pair_fields(table, cols)
-    spark = table.spark
-    md = table.metadata
-    d = _pair_dir(table, f_lo.field_id, f_hi.field_id)
     entries, _ = table._live_data_and_deletes()
-    live = {e.data_file.file_path for e in entries}
-    have = set()
-    if os.path.isdir(d) and any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        have = {r["file_path"] for r in
-                spark.read.parquet(d)
-                .select("file_path").distinct().collect()}
-    todo = sorted(live - have)
-    if not todo:
-        return 0
 
-    # schema-aware two-column read, row-aligned (column_source reads one
-    # column; a pair needs both from the same row)
-    sid_by_path = {e.data_file.file_path: e.data_file.schema_id
-                   for e in entries}
-    by_sid: dict = {}
-    for p in todo:
-        by_sid.setdefault(sid_by_path.get(p, md.current_schema_id),
-                          []).append(p)
-    fp = F.regexp_replace(F.col("_metadata.file_path"),
-                          "^file:", "").alias("file_path")
-    frames = []
-    for sid in sorted(by_sid):
-        ps = sorted(by_sid[sid])
-        written = md.schema_by_id(sid)
-        w_lo = written.name_for_id(f_lo.field_id)
-        w_hi = written.name_for_id(f_hi.field_id)
-        if w_lo is None or w_hi is None:
-            # either column absent at write time: every row has a NULL
-            # side, no pair can co-occur — the file lands in the store
-            # as an empty array via the left join below
-            continue
-        rschema = T.StructType([
-            T.StructField(w_lo, type_to_spark(
-                written.find_field(f_lo.field_id).type), True),
-            T.StructField(w_hi, type_to_spark(
-                written.find_field(f_hi.field_id).type), True)])
-        ab = [F.col(w_lo).cast(type_to_spark(f_lo.type)).alias("_a"),
-              F.col(w_hi).cast(type_to_spark(f_hi.type)).alias("_b")]
-        pq = [p for p in ps if p.endswith(".parquet")]
-        other = [p for p in ps if not p.endswith(".parquet")]
-        if pq:
-            frames.append(spark.read.schema(rschema).parquet(*pq)
-                          .select(fp, *ab))
-        if other:
-            # ORC/Avro files pair-hash through the whole-file readers
-            frames.append(
-                _other_format_rows(
-                    spark, written,
-                    [written.find_field(f_lo.field_id),
-                     written.find_field(f_hi.field_id)], other)
-                .select(F.col("_file").alias("file_path"), *ab))
-    if frames:
-        src = frames[0]
-        for d_ in frames[1:]:
-            src = src.unionByName(d_)
+    def make(todo):
+        # row-aligned two-column read: a file written before either
+        # column existed has a NULL side on every row, so no pair can
+        # co-occur and it lands as an empty array
+        src = column_source(table, {"_a": f_lo.name, "_b": f_hi.name},
+                            todo, entries)
         nn = (src.where(F.col("_a").isNotNull() & F.col("_b").isNotNull())
-              .select("file_path",
-                      F.xxhash64("_a", "_b").alias("h"))
+              .select("file_path", F.xxhash64("_a", "_b").alias("h"))
               .distinct())
-        counts = nn.groupBy("file_path").agg(F.count("*").alias("n"))
-        ok = counts.filter(F.col("n") <= max_ndv).select("file_path")
-        vals = (nn.join(ok, "file_path", "left_semi")
-                .groupBy("file_path")
-                .agg(F.sort_array(F.collect_set("h")).alias("values")))
-    else:
-        counts = vals = None
-    arr = T.ArrayType(T.LongType())
-    paths_df = spark.createDataFrame([(p,) for p in todo],
-                                     "file_path string")
-    if counts is None:
-        merged = paths_df.select(
-            "file_path", F.array().cast(arr).alias("values"))
-    else:
-        merged = (paths_df
-                  .join(counts, "file_path", "left")
-                  .join(vals, "file_path", "left")
-                  .select("file_path",
-                          F.when(F.col("n").isNull(),
-                                 F.array().cast(arr))    # no non-null pair
-                          .when(F.col("n") > max_ndv,
-                                F.lit(None).cast(arr))   # overflow
-                          .otherwise(F.col("values")).alias("values")))
-    merged.write.mode("append").parquet(d)
-    return len(todo)
+        return (_capped_sets(table, todo, nn, "h", max_ndv)
+                .select("file_path", _capped(F.col("packed"), T.LongType(),
+                                             max_ndv).alias("values")))
+    return S.store(table, "dict_pair", f_lo.field_id,
+                   f_hi.field_id).build(entries, make)
+
+
+def _drop_disproven(rows, lits: list, drop: set) -> None:
+    """Add to ``drop`` the store files whose concrete value set shares
+    nothing with ``lits`` — only the DISPROVEN paths come back to the
+    driver.  A literal/store type mismatch leaves ``drop`` as is."""
+    try:
+        lit_arr = F.array(*[F.lit(v) for v in lits]) \
+            .cast(rows.schema["values"].dataType)
+        drop |= {r["file_path"] for r in
+                 rows.where(F.col("values").isNotNull() &
+                            ~F.arrays_overlap(F.col("values"), lit_arr))
+                 .select("file_path").collect()}
+    except Exception:  # noqa: BLE001 — probe trouble: stay sound
+        pass
 
 
 def pair_dictionary_prune(table, data_entries: list, bound,
@@ -666,13 +535,8 @@ def pair_dictionary_prune(table, data_entries: list, bound,
     pair hash cannot hold a matching row.  ``conjuncts`` is
     dictionary_prune's walked [(field_id, literals)] list.  Advisory
     only; every guard failure keeps the file."""
-    if len(conjuncts) < 2:
-        return data_entries
-    spark = table.spark
-    if spark is None:
-        return data_entries
-    root = os.path.join(table.location, "stats_dict_pair")
-    if not os.path.isdir(root):
+    if len(conjuncts) < 2 or table.spark is None \
+            or not S.planted(table, "dict_pair"):
         return data_entries
     from linkedin_iceberg_spark.schema import type_to_spark
     by_fid = {}
@@ -684,59 +548,71 @@ def pair_dictionary_prune(table, data_entries: list, bound,
                     for f in table.schema.fields
                     if isinstance(f.type, str)}
     drop: set = set()
-    candidates = {e.data_file.file_path for e in data_entries}
-    # probe only stores whose dir key matches the CURRENT engine types
-    # (_pair_dir embeds them, r11): a store built under promoted-away
-    # types simply isn't found — its hashes are meaningless now, and
-    # keeping the files is the sound answer.  Legacy un-typed dirs
-    # ("<lo>_<hi>") never match the expected name either.
+    # probe only stores keyed by the CURRENT engine types (r11): a store
+    # built under promoted-away types simply isn't found — its hashes
+    # are meaningless now, and keeping the files is the sound answer
     fids = sorted(by_fid)
     for i, fid_lo in enumerate(fids):
         for fid_hi in fids[i + 1:]:
-            if not os.path.isdir(_pair_dir(table, fid_lo, fid_hi)):
-                continue
+            store = S.store(table, "dict_pair", fid_lo, fid_hi)
             lits_lo, lits_hi = by_fid[fid_lo], by_fid[fid_hi]
-            if len(lits_lo) * len(lits_hi) > PAIR_PROBE_MAX_LITERALS:
-                continue
             t_lo = stype_by_fid.get(fid_lo)
             t_hi = stype_by_fid.get(fid_hi)
-            if t_lo is None or t_hi is None:
-                continue
-            d = _pair_dir(table, fid_lo, fid_hi)
-            if not any(p.endswith(".parquet") for p in os.listdir(d)):
+            if len(lits_lo) * len(lits_hi) > PAIR_PROBE_MAX_LITERALS \
+                    or t_lo is None or t_hi is None or not store.exists():
                 continue
             # hash every literal pair EXACTLY as the build did (cast to
             # the current engine types, xxhash64 in field-id order); a
             # cast that NULLs a literal makes its hash meaningless —
             # skip the store (sound: pruning is advisory)
             pairs = [(a, b) for a in lits_lo for b in lits_hi]
+            exprs = []
+            for i2, (a, b) in enumerate(pairs):
+                ca = F.lit(a).cast(t_lo)
+                cb = F.lit(b).cast(t_hi)
+                exprs += [ca.alias(f"a{i2}"), cb.alias(f"b{i2}"),
+                          F.xxhash64(ca, cb).alias(f"h{i2}")]
             try:
-                exprs = []
-                for i2, (a, b) in enumerate(pairs):
-                    ca = F.lit(a).cast(t_lo)
-                    cb = F.lit(b).cast(t_hi)
-                    exprs += [ca.alias(f"a{i2}"), cb.alias(f"b{i2}"),
-                              F.xxhash64(ca, cb).alias(f"h{i2}")]
-                row = spark.range(1).select(*exprs).first()
-                if any(row[f"a{i2}"] is None or row[f"b{i2}"] is None
-                       for i2 in range(len(pairs))):
-                    continue
-                hashes = [row[f"h{i2}"] for i2 in range(len(pairs))]
-                store = spark.read.parquet(d)
-                gone = (store
-                        .where(F.col("values").isNotNull() &
-                               ~F.arrays_overlap(
-                                   F.col("values"),
-                                   F.array(*[F.lit(h).cast("long")
-                                             for h in hashes])))
-                        .select("file_path").collect())
+                row = table.spark.range(1).select(*exprs).first()
             except Exception:  # noqa: BLE001 — probe trouble: keep all
                 continue
-            drop |= {r["file_path"] for r in gone} & candidates
+            if any(row[f"a{i2}"] is None or row[f"b{i2}"] is None
+                   for i2 in range(len(pairs))):
+                continue
+            _drop_disproven(store.rows(),
+                            [row[f"h{i2}"] for i2 in range(len(pairs))],
+                            drop)
+    return _without(data_entries, drop)
+
+
+def _without(data_entries: list, drop: set) -> list:
     if not drop:
         return data_entries
-    return [e for e in data_entries
-            if e.data_file.file_path not in drop]
+    return [e for e in data_entries if e.data_file.file_path not in drop]
+
+
+def eq_in_conjuncts(bound, types) -> list:
+    """``[(field_id, literals)]`` for the top-level AND conjuncts of
+    ``bound`` that are eq/IN over a plain column of one of ``types`` —
+    the shapes a per-file value store can disprove."""
+    from linkedin_iceberg_spark.expressions.expressions import (
+        And, BoundReference, Operation, Predicate)
+    out = []
+
+    def walk(e):
+        if isinstance(e, And):
+            walk(e.left)
+            walk(e.right)
+        elif isinstance(e, Predicate) and \
+                isinstance(e.term, BoundReference) and \
+                isinstance(e.term.type, str) and e.term.type in types:
+            if e.op == Operation.EQ:
+                out.append((e.term.field_id, [e.literal]))
+            elif e.op == Operation.IN:
+                out.append((e.term.field_id, sorted(e.literals)))
+
+    walk(bound)
+    return out
 
 
 def dictionary_prune(table, data_entries: list, bound) -> list:
@@ -753,59 +629,19 @@ def dictionary_prune(table, data_entries: list, bound) -> list:
     correctness never depends on it.  Called from plan_files when the
     table has a stats_dict or stats_dict_pair directory; time travel is
     safe because entries are keyed by immutable file path."""
-    from linkedin_iceberg_spark.expressions.expressions import (
-        And, BoundReference, Operation, Predicate)
-    conjuncts = []
-
-    def walk(e):
-        if isinstance(e, And):
-            walk(e.left)
-            walk(e.right)
-        elif isinstance(e, Predicate) and \
-                isinstance(e.term, BoundReference) and \
-                isinstance(e.term.type, str) and \
-                e.term.type in _DICT_TYPES:
-            if e.op == Operation.EQ:
-                conjuncts.append((e.term.field_id, [e.literal]))
-            elif e.op == Operation.IN:
-                conjuncts.append((e.term.field_id, sorted(e.literals)))
-
-    walk(bound)
-    if not conjuncts:
-        return data_entries
-    spark = table.spark
-    if spark is None:
-        # Spark-less planning context (the Python DataSource plans in a
-        # worker process with no session): store-backed pruning needs
-        # Spark jobs, so it simply doesn't advise here — the pushed
-        # filter still re-applies row-level, correctness unchanged
+    conjuncts = eq_in_conjuncts(bound, _DICT_TYPES)
+    if not conjuncts or table.spark is None:
+        # no eq/IN shape — or a Spark-less planning context (the Python
+        # DataSource plans in a worker process with no session), where
+        # store-backed pruning would need Spark jobs: no advice, the
+        # pushed filter still re-applies row-level
         return data_entries
     drop: set = set()
-    candidates = {e.data_file.file_path for e in data_entries}
     for fid, lits in conjuncts:
-        d = _dict_dir(table, fid)
-        if not os.path.isdir(d) or not any(
-                p.endswith(".parquet") for p in os.listdir(d)):
-            continue
-        store = spark.read.parquet(d)
-        lit_arr = F.array(*[F.lit(v) for v in lits])
-        # collect only the DISPROVEN paths (values present, no overlap
-        # with the literal set) — the drop list is what comes back to
-        # the driver, bounded by the candidate count
-        try:
-            gone = (store
-                    .where(F.col("values").isNotNull() &
-                           ~F.arrays_overlap(
-                               F.col("values"),
-                               lit_arr.cast(
-                                   store.schema["values"].dataType)))
-                    .select("file_path").collect())
-        except Exception:
-            continue  # literal/store type mismatch: skip, stay sound
-        drop |= {r["file_path"] for r in gone} & candidates
-    if drop:
-        data_entries = [e for e in data_entries
-                        if e.data_file.file_path not in drop]
+        rows = S.store(table, "dict", fid).rows()
+        if rows is not None:
+            _drop_disproven(rows, lits, drop)
+    data_entries = _without(data_entries, drop)
     # pair pass: joint co-occurrence pruning over two-conjunct combos
     return pair_dictionary_prune(table, data_entries, bound, conjuncts)
 
@@ -832,8 +668,8 @@ def kmv_table_overlap(left, left_col: str, right, right_col: str,
       intersection_est  overlap_k * ndv_union // m (integer floor)
 
     where m = |bottomk(AuB)| (= k, or the exact union size below k)."""
-    a = _kmv_bottomk(left, left_col, k)
-    b = _kmv_bottomk(right, right_col, k)
+    a = left.new_scan()._kmv_bottomk(left_col, k)
+    b = right.new_scan()._kmv_bottomk(right_col, k)
     union = sorted(set(a) | set(b))[:k]
     m = len(union)
     ndv_u = kmv_estimate(union, k)
@@ -848,56 +684,9 @@ def kmv_table_overlap(left, left_col: str, right, right_col: str,
     }
 
 
-def _kmv_bottomk(table, col: str, k: int) -> list:
-    """The table's merged bottom-k hash list (store-served for covered
-    delete-free files, live-hashed for the rest) — the same channel mix
-    as TableScan.approx_ndv, returning the hashes instead of the
-    estimate."""
-    scan = table.new_scan()
-    tasks = scan.plan_files()
-    fast = [t for t in tasks if not t.deletes]
-    slow = [t for t in tasks if t.deletes]
-    spark = table.spark
-    d = _kmv_dir(table, col, k)
-    frames = []
-    covered: set = set()
-    if fast and os.path.isdir(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)):
-        store = spark.read.parquet(d)
-        paths_df = spark.createDataFrame(
-            [(t.file.file_path,) for t in sorted(
-                fast, key=lambda t: t.file.file_path)],
-            "file_path string")
-        hit = store.join(paths_df, "file_path", "left_semi")
-        covered = {r["file_path"] for r in
-                   hit.select("file_path").distinct().collect()}
-        frames.append(hit.select("h"))
-    live = [t for t in fast if t.file.file_path not in covered]
-    if live:
-        frames.append(
-            column_source(table, col, [t.file.file_path for t in live])
-            .select(_kmv_hash("v").alias("h")))
-    if slow:
-        frames.append(scan._to_df_default(tasks=slow)
-                      .select(_kmv_hash(col).alias("h")))
-    if not frames:
-        return []
-    merged = frames[0]
-    for f_ in frames[1:]:
-        merged = merged.unionByName(f_)
-    return [r["h"] for r in
-            merged.where(F.col("h").isNotNull()).distinct()
-            .orderBy("h").limit(k).collect()]
-
-
 # =========================================================================
 # Histogram plane: per-file exact value COUNTS for low-NDV columns
 # =========================================================================
-
-def _hist_dir(table, field_id: int) -> str:
-    # field-id-keyed like the dictionary store: rename-safe
-    return os.path.join(table.location, "stats_hist", str(field_id))
-
 
 def analyze_histogram(table, col: str,
                       max_ndv: int = None) -> int:
@@ -918,73 +707,42 @@ def analyze_histogram(table, col: str,
     they are never rescanned; they simply never fold and real reads
     cover them).  Incremental by construction: only live files missing
     from the store are scanned.  Returns files analyzed now."""
+    from pyspark.sql import types as T
+
+    from linkedin_iceberg_spark.schema import type_to_spark
     if max_ndv is None:
         max_ndv = DICT_DEFAULT_MAX_NDV
-    f = next((f for f in table.schema.fields if f.name == col), None)
-    if f is None:
-        raise ValueError(f"no such column {col!r}")
-    if not (isinstance(f.type, str) and f.type in _DICT_TYPES):
-        raise ValueError(
-            f"histogram stats support {sorted(_DICT_TYPES)} columns; "
-            f"{col!r} is {f.type!r}")
-    spark = table.spark
-    stype = next(sf.dataType for sf in table.schema.to_spark().fields
-                 if sf.name == col)
-    from pyspark.sql import types as T
-    arr = T.ArrayType(stype)
-    cnt_arr = T.ArrayType(T.LongType())
-    d = _hist_dir(table, f.field_id)
+    f = _field(table, col, _DICT_TYPES, "histogram")
     entries, _ = table._live_data_and_deletes()
-    live = {e.data_file.file_path for e in entries}
-    have = set()
-    if os.path.isdir(d) and any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        have = {r["file_path"] for r in
-                spark.read.parquet(d)
-                .select("file_path").distinct().collect()}
-    todo = sorted(live - have)
-    if not todo:
-        return 0
-    src = column_source(table, col, todo, entries)
-    per_val = (src.where(F.col("v").isNotNull())
-               .groupBy("file_path", "v")
-               .agg(F.count("*").alias("n")))
-    ndvs = per_val.groupBy("file_path").agg(F.count("*").alias("ndv"))
-    ok = ndvs.filter(F.col("ndv") <= max_ndv).select("file_path")
-    # sorted (value, count) pairs zip into two aligned arrays; the
-    # semi-join keeps collect_list bounded by max_ndv per group
-    packed = (per_val.join(ok, "file_path", "left_semi")
-              .groupBy("file_path")
-              .agg(F.sort_array(F.collect_list(F.struct("v", "n")))
-                   .alias("pairs"))
-              .select("file_path",
-                      F.col("pairs.v").alias("values"),
-                      F.col("pairs.n").alias("counts")))
-    nulls = (src.groupBy("file_path")
-             .agg(F.sum(F.when(F.col("v").isNull(), 1).otherwise(0))
-                  .alias("null_count")))
-    paths_df = spark.createDataFrame([(p,) for p in todo],
-                                     "file_path string")
-    merged = (paths_df
-              .join(ndvs, "file_path", "left")
-              .join(packed, "file_path", "left")
-              .join(nulls, "file_path", "left")
-              .select(
-                  "file_path",
-                  F.when(F.col("ndv").isNull(),
-                         F.array().cast(arr))            # all-NULL/empty
-                  .when(F.col("ndv") > max_ndv,
-                        F.lit(None).cast(arr))           # overflow
-                  .otherwise(F.col("values")).alias("values"),
-                  F.when(F.col("ndv").isNull(),
-                         F.array().cast(cnt_arr))
-                  .when(F.col("ndv") > max_ndv,
-                        F.lit(None).cast(cnt_arr))
-                  .otherwise(F.col("counts")).alias("counts"),
-                  F.coalesce(F.col("null_count"), F.lit(0))
-                  .alias("null_count")))
-    merged.write.mode("append").parquet(d)
-    return len(todo)
+
+    def make(todo):
+        src = column_source(table, col, todo, entries)
+        per_val = (src.where(F.col("v").isNotNull())
+                   .groupBy("file_path", "v")
+                   .agg(F.count("*").alias("n")))
+        nulls = (src.groupBy("file_path")
+                 .agg(F.sum(F.when(F.col("v").isNull(), 1).otherwise(0))
+                      .alias("null_count")))
+        # sorted (value, count) pairs unzip into two aligned arrays
+        return (_capped_sets(table, todo, per_val, F.struct("v", "n"),
+                             max_ndv)
+                .join(nulls, "file_path", "left")
+                .select("file_path",
+                        _capped(F.col("packed.v"), type_to_spark(f.type),
+                                max_ndv).alias("values"),
+                        _capped(F.col("packed.n"), T.LongType(),
+                                max_ndv).alias("counts"),
+                        F.coalesce(F.col("null_count"), F.lit(0))
+                        .alias("null_count")))
+    return S.store(table, "hist", f.field_id).build(entries, make)
+
+
+def _hist_cover(table, col: str, file_paths):
+    fid = table.schema.id_for_name(col)
+    if fid is None:
+        return None, set()
+    return S.store(table, "hist", fid).cover(
+        file_paths, where=F.col("values").isNotNull())
 
 
 def histogram_covers(table, col: str, file_paths: list = None) -> bool:
@@ -993,24 +751,11 @@ def histogram_covers(table, col: str, file_paths: list = None) -> bool:
     zero-data-I/O metadata fold, strictly better than ANY read-based
     plan, including the zero-shuffle co-located one (SQL route
     tiebreaker, r8 ADVICE)."""
-    fid = table.schema.id_for_name(col)
-    if fid is None:
-        return False
-    d = _hist_dir(table, fid)
-    if not os.path.isdir(d) or not any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        return False
     if file_paths is None:
         entries, _ = table._live_data_and_deletes()
         file_paths = [e.data_file.file_path for e in entries]
-    want = set(file_paths)
-    if not want:
-        return True
-    have = {r["file_path"] for r in
-            table.spark.read.parquet(d)
-            .where(F.col("values").isNotNull())
-            .select("file_path").distinct().collect()}
-    return want <= have
+    store, covered = _hist_cover(table, col, file_paths)
+    return store is not None and set(file_paths) <= covered
 
 
 def histogram_fold(table, col: str, file_paths: list):
@@ -1021,41 +766,23 @@ def histogram_fold(table, col: str, file_paths: list):
     additive, so per-file degradation is exact, the KMV-merge property
     for plain counting).  The None key carries the NULL group's count,
     matching SQL GROUP BY."""
-    fid = table.schema.id_for_name(col)
-    if fid is None:
+    if table.schema.id_for_name(col) is None:
         raise ValueError(f"no such column {col!r}")
-    d = _hist_dir(table, fid)
-    if not file_paths or not os.path.isdir(d) or not any(
-            p.endswith(".parquet") for p in os.listdir(d)):
+    if not file_paths:
         return {}, set()
-    spark = table.spark
-    paths_df = spark.createDataFrame(
-        [(p,) for p in sorted(set(file_paths))], "file_path string")
-    store = (spark.read.parquet(d)
-             .join(paths_df, "file_path", "left_semi")
-             .where(F.col("values").isNotNull())
-             # a retried analyze may have appended duplicate rows:
-             # counts are additive, so de-duplicate per file first
-             .dropDuplicates(["file_path"])
-             .cache())
     # the fold is DISTRIBUTED (explode -> sum per value): the driver
     # collects only the covered paths (bounded by the candidate list)
     # and one row per distinct value (bounded by the store's NDV cap),
     # never the per-file arrays
-    covered = {r["file_path"] for r in
-               store.select("file_path").collect()}
+    store, covered = _hist_cover(table, col, file_paths)
     if not covered:
-        store.unpersist()
         return {}, set()
-    counts: dict = {}
-    vrows = (store.select(F.explode(F.arrays_zip("values", "counts"))
-                          .alias("vc"))
-             .groupBy(F.col("vc.values").alias("v"))
-             .agg(F.sum("vc.counts").alias("n")).collect())
-    for r in vrows:
-        counts[r["v"]] = counts.get(r["v"], 0) + r["n"]
+    counts = {r["v"]: r["n"] for r in
+              store.select(F.explode(F.arrays_zip("values", "counts"))
+                           .alias("vc"))
+              .groupBy(F.col("vc.values").alias("v"))
+              .agg(F.sum("vc.counts").alias("n")).collect()}
     nulls = store.agg(F.sum("null_count")).head()[0] or 0
-    store.unpersist()
     if nulls:
         counts[None] = counts.get(None, 0) + nulls
     return counts, covered
@@ -1064,13 +791,6 @@ def histogram_fold(table, col: str, file_paths: list):
 # =========================================================================
 # Top-k plane: per-file truncated histograms with merge-exact BOUNDS
 # =========================================================================
-
-def _topk_dir(table, field_id: int, m: int) -> str:
-    # the truncation width is part of the key: stores built at
-    # different m have different bounds algebra and never mix
-    return os.path.join(table.location, "stats_topk",
-                        f"{field_id}_m{m}")
-
 
 TOPK_DEFAULT_M = 256
 
@@ -1119,52 +839,32 @@ def analyze_topk(table, col: str, m: int = TOPK_DEFAULT_M) -> int:
     time with the identical recipe, so coverage gaps degrade cost, not
     correctness of the bounds.  Incremental tail-only, field-id-keyed,
     like every other stats plane here.  Returns files analyzed now."""
+    from pyspark.sql import types as T
+
+    from linkedin_iceberg_spark.schema import type_to_spark
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
-    f = next((f for f in table.schema.fields if f.name == col), None)
-    if f is None:
-        raise ValueError(f"no such column {col!r}")
-    if not (isinstance(f.type, str) and f.type in _DICT_TYPES):
-        raise ValueError(
-            f"top-k stats support {sorted(_DICT_TYPES)} columns; "
-            f"{col!r} is {f.type!r}")
-    spark = table.spark
-    d = _topk_dir(table, f.field_id, m)
+    f = _field(table, col, _DICT_TYPES, "top-k")
     entries, _ = table._live_data_and_deletes()
-    live = {e.data_file.file_path for e in entries}
-    have = set()
-    if os.path.isdir(d) and any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        have = {r["file_path"] for r in
-                spark.read.parquet(d)
-                .select("file_path").distinct().collect()}
-    todo = sorted(live - have)
-    if not todo:
-        return 0
-    src = column_source(table, col, todo, entries)
-    built = _per_file_topk(src, m)
-    # files whose column is all-NULL (or empty) produce no value rows:
-    # record them with empty arrays so they are never rescanned and
-    # never count as a coverage gap
-    paths_df = spark.createDataFrame([(p,) for p in todo],
-                                     "file_path string")
-    stype = next(sf.dataType for sf in table.schema.to_spark().fields
-                 if sf.name == col)
-    from pyspark.sql import types as T
-    arr_t = T.ArrayType(stype)
-    cnt_t = T.ArrayType(T.LongType())
-    merged = (paths_df.join(built, "file_path", "left")
-              .select("file_path",
-                      F.coalesce(F.col("values"),
-                                 F.array().cast(arr_t)).alias("values"),
-                      F.coalesce(F.col("counts"),
-                                 F.array().cast(cnt_t)).alias("counts"),
-                      F.coalesce(F.col("rest_cap"), F.lit(0))
-                      .alias("rest_cap"),
-                      F.coalesce(F.col("other_total"), F.lit(0))
-                      .alias("other_total")))
-    merged.write.mode("append").parquet(d)
-    return len(todo)
+
+    def make(todo):
+        built = _per_file_topk(column_source(table, col, todo, entries), m)
+        # files whose column is all-NULL (or empty) produce no value
+        # rows: record them with empty arrays so they are never
+        # rescanned and never count as a coverage gap
+        return (S.paths_frame(table.spark, todo)
+                .join(built, "file_path", "left")
+                .select("file_path",
+                        F.coalesce(F.col("values"), F.array().cast(
+                            T.ArrayType(type_to_spark(f.type))))
+                        .alias("values"),
+                        F.coalesce(F.col("counts"), F.array().cast(
+                            T.ArrayType(T.LongType()))).alias("counts"),
+                        F.coalesce(F.col("rest_cap"), F.lit(0))
+                        .alias("rest_cap"),
+                        F.coalesce(F.col("other_total"), F.lit(0))
+                        .alias("other_total")))
+    return S.store(table, "topk", f.field_id, m=m).build(entries, make)
 
 
 def approx_top_k(table, col: str, k: int,
@@ -1183,10 +883,7 @@ def approx_top_k(table, col: str, k: int,
     valid at any coverage level."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    f = next((ff for ff in table.schema.fields if ff.name == col), None)
-    if f is None:
-        raise ValueError(f"no such column {col!r}")
-    spark = table.spark
+    f = _field(table, col)
     tasks = table.new_scan().plan_files()
     if any(t.deletes for t in tasks):
         rows = (table.to_df().where(F.col(col).isNotNull())
@@ -1198,28 +895,13 @@ def approx_top_k(table, col: str, k: int,
     live = sorted({t.file.file_path for t in tasks})
     if not live:
         return []
-    d = _topk_dir(table, f.field_id, m)
-    parts = []
-    covered = set()
-    if os.path.isdir(d) and any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        paths_df = spark.createDataFrame([(p,) for p in live],
-                                         "file_path string")
-        store = (spark.read.parquet(d)
-                 .join(paths_df, "file_path", "left_semi")
-                 .dropDuplicates(["file_path"]))
-        covered = {r["file_path"] for r in
-                   store.select("file_path").collect()}
-        if covered:
-            parts.append(store)
+    store, covered = S.store(table, "topk", f.field_id, m=m).cover(live)
+    parts = [store] if covered else []
     uncovered = sorted(set(live) - covered)
     if uncovered:
         src = column_source(table, col, uncovered)
         parts.append(_per_file_topk(src, m))
-    allf = parts[0]
-    for p in parts[1:]:
-        allf = allf.unionByName(p)
-    allf = allf.cache()
+    allf = _union(parts).cache()
     try:
         total_rest = allf.agg(F.sum("rest_cap")).head()[0] or 0
         # per candidate value: stored mass (lower) and the rest-caps of
@@ -1259,44 +941,15 @@ def approx_top_k(table, col: str, k: int,
 # ─────────────────────────────────────────────────────────────────────
 
 SAMPLE_DEFAULT_K = 1024
-SAMPLE_SALT = "v1"
 _SAMPLE_TYPES = {"int", "long", "float", "double", "string", "date",
                  "timestamp"}
 
 
-def _sample_dir(table, field_id: int, k: int,
-                group_field_id: int = None,
-                salt: str = SAMPLE_SALT) -> str:
-    # field-id keyed like every plane (rename-safe); k is part of the
-    # key because bottom-k stores of different k don't substitute, and
-    # a grouped store (per-(file, group) bottom-k) never substitutes
-    # for a global one.  A non-default SALT is part of the key too
-    # (r11): hashes computed under a different salt are a different
-    # sample — serving them would silently break the store/live
-    # byte-identical guarantee.  The default salt keeps the bare name,
-    # so existing stores stay addressable.
-    leaf = (f"{field_id}_{k}" if group_field_id is None
-            else f"{field_id}_g{group_field_id}_{k}")
-    if salt != SAMPLE_SALT:
-        import hashlib as _hl
-        leaf += "_s" + _hl.md5(salt.encode()).hexdigest()[:8]
-    return os.path.join(table.location, "stats_sample", leaf)
-
-
 def _sample_fields(table, col: str, group_col):
-    f = next((ff for ff in table.schema.fields if ff.name == col), None)
-    if f is None:
-        raise ValueError(f"no such column {col!r}")
-    if not (isinstance(f.type, str) and f.type in _SAMPLE_TYPES):
-        raise ValueError(
-            f"sample stats support {sorted(_SAMPLE_TYPES)} columns; "
-            f"{col!r} is {f.type!r}")
+    f = _field(table, col, _SAMPLE_TYPES, "sample")
     if group_col is None:
         return f, None
-    g = next((ff for ff in table.schema.fields
-              if ff.name == group_col), None)
-    if g is None:
-        raise ValueError(f"no such column {group_col!r}")
+    g = _field(table, group_col)
     if g.field_id == f.field_id:
         raise ValueError("group_col must differ from the value column")
     if not (isinstance(g.type, str)
@@ -1306,98 +959,9 @@ def _sample_fields(table, col: str, group_col):
     return f, g
 
 
-def _sample_source(table, f, g, paths: list, entries: list):
-    """(file_path, v, pos[, g]) rows for ``paths`` — the column_source
-    discipline (WRITTEN name/type per schema_id, cast to current) with
-    the in-file row index, reading the group column from the SAME row
-    when grouped."""
-    from pyspark.sql import types as T
-
-    from linkedin_iceberg_spark.schema import type_to_spark
-
-    spark = table.spark
-    md = table.metadata
-    cur_v = type_to_spark(f.type)
-    cur_g = type_to_spark(g.type) if g is not None else None
-    sid_by_path = {e.data_file.file_path: e.data_file.schema_id
-                   for e in entries}
-    by_sid: dict = {}
-    for p in paths:
-        by_sid.setdefault(sid_by_path.get(p, md.current_schema_id),
-                          []).append(p)
-    fp = F.regexp_replace(F.col("_metadata.file_path"),
-                          "^file:", "").alias("file_path")
-    pos = F.col("_metadata.row_index").alias("pos")
-    frames = []
-    for sid in sorted(by_sid):
-        ps = sorted(by_sid[sid])
-        written = md.schema_by_id(sid)
-        pq = [p for p in ps if p.endswith(".parquet")]
-        other = [p for p in ps if not p.endswith(".parquet")]
-        sfields, sel, osel, pruned = [], [fp], \
-            [F.col("_file").alias("file_path")], []
-        for fld, cur, alias in (((f, cur_v, "v"),) +
-                                (((g, cur_g, "g"),) if g is not None
-                                 else ())):
-            wname = written.name_for_id(fld.field_id)
-            if wname is None:
-                sel.append(F.lit(None).cast(cur).alias(alias))
-                osel.append(F.lit(None).cast(cur).alias(alias))
-            else:
-                wtype = written.find_field(fld.field_id).type
-                sfields.append(T.StructField(
-                    wname, type_to_spark(wtype), True))
-                pruned.append(written.find_field(fld.field_id))
-                sel.append(F.col(wname).cast(cur).alias(alias))
-                osel.append(F.col(wname).cast(cur).alias(alias))
-        if pq:
-            pq_fields = sfields or [T.StructField(
-                written.fields[0].name,
-                type_to_spark(written.fields[0].type), True)]
-            frames.append(spark.read.schema(T.StructType(pq_fields))
-                          .parquet(*pq).select(*sel, pos))
-        if other:
-            # ORC/Avro: whole-file readers carry the exact per-file
-            # row counter — the same ROW_POSITION number, so the
-            # position-hashed sample recipe is format-agnostic (r10)
-            frames.append(_other_format_rows(
-                spark, written, pruned, other)
-                .select(*osel, F.col("_pos").alias("pos")))
-    out = frames[0]
-    for d_ in frames[1:]:
-        out = out.unionByName(d_)
-    return out
-
-
-def _other_format_rows(spark, written, pruned_fields: list,
-                       paths: list):
-    """Raw (written columns, _file, _pos) rows over ORC/Avro files —
-    ORC physically prunes to ``pruned_fields``, Avro decodes the full
-    written schema (no codec projection)."""
-    from linkedin_iceberg_spark.schema import Schema as _S
-    orc = [p for p in paths if p.endswith(".orc")]
-    avro = [p for p in paths if p.endswith(".avro")]
-    other = [p for p in paths if not (p.endswith(".orc")
-                                      or p.endswith(".avro"))]
-    if other:
-        raise ValueError(f"unsupported data file format: {other[0]!r}")
-    frames = []
-    if orc:
-        from linkedin_iceberg_spark.sources.orc_spark import (
-            read_orc_files)
-        pruned = _S(pruned_fields or [written.fields[0]],
-                    schema_id=written.schema_id)
-        frames.append(read_orc_files(spark, orc, pruned))
-    if avro:
-        from linkedin_iceberg_spark.sources.avro_spark import (
-            read_avro_files)
-        frames.append(read_avro_files(spark, avro, written,
-                                      with_file_col=True,
-                                      with_pos_col=True))
-    out = frames[0]
-    for d_ in frames[1:]:
-        out = out.unionByName(d_, allowMissingColumns=True)
-    return out
+def _sample_store(table, f, g, k: int, salt: str):
+    return S.store(table, "sample", f.field_id,
+                   g.field_id if g is not None else None, k=k, salt=salt)
 
 
 def sample_hash(v, pos, salt: str = SAMPLE_SALT):
@@ -1452,77 +1016,59 @@ def analyze_sample(table, col: str, k: int = SAMPLE_DEFAULT_K,
     from pyspark.sql import Window as W
 
     from linkedin_iceberg_spark.schema import type_to_spark
-    spark = table.spark
     cur_stype = type_to_spark(f.type)
-    d = _sample_dir(table, f.field_id, k,
-                    g.field_id if g is not None else None, salt)
     entries, _ = table._live_data_and_deletes()
-    live = {e.data_file.file_path for e in entries}
-    have = set()
-    if os.path.isdir(d) and any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        have = {r["file_path"] for r in
-                spark.read.parquet(d)
-                .select("file_path").distinct().collect()}
-    todo = sorted(live - have)
-    if not todo:
-        return 0
-    src = _sample_source(table, f, g, todo, entries)
-    nn = src.where(F.col("v").isNotNull())
-    part = ["file_path"] + (["g"] if g is not None else [])
-    w = W.partitionBy(*part).orderBy(
-        F.col("h").asc(), F.col("v").asc(), F.col("pos").asc())
-    # n_nonnull rides a window over the SAME partitioning (a groupBy +
-    # join would drop NULL groups on the equality join key)
-    cw = W.partitionBy(*part)
-    gcols = (["g"] if g is not None else [])
-    sampled = (nn.withColumn("h", sample_hash(F.col("v"), F.col("pos"),
-                                              salt))
-               .withColumn("n_nonnull",
-                           F.count(F.lit(1)).over(cw).cast("long"))
-               .withColumn("_sr", F.row_number().over(w))
-               .filter(F.col("_sr") <= k).drop("_sr"))
-    out = sampled.select("file_path", *gcols, "h",
-                         F.col("v").alias("value"), "pos", "n_nonnull")
-    # all-NULL/empty files get a marker row: covered, nothing sampled
-    paths_df = spark.createDataFrame([(p,) for p in todo],
-                                     "file_path string")
-    marker_g = ([F.lit(None).cast(type_to_spark(g.type)).alias("g")]
-                if g is not None else [])
-    markers = (paths_df.join(nn.select("file_path").distinct(),
-                             "file_path", "left_anti")
-               .select("file_path", *marker_g,
-                       F.lit(None).cast("string").alias("h"),
-                       F.lit(None).cast(cur_stype).alias("value"),
-                       F.lit(None).cast("long").alias("pos"),
-                       (F.lit(None) if g is not None else F.lit(0))
-                       .cast("long").alias("n_nonnull")))
-    parts = [out, markers]
-    if g is not None:
-        # grouped stores additionally record a marker per (file, GROUP)
-        # whose values are all NULL (r11: n_nonnull = 0, h NULL) — the
-        # store then enumerates the file's full group universe, which
-        # the SQL grouped-percentile route needs to emit Spark's NULL
-        # row for such groups with zero data I/O.  The file-coverage
-        # marker above is distinguishable by n_nonnull IS NULL.
-        univ = src.select("file_path", "g").distinct()
-        seen = nn.select("file_path", "g").distinct() \
-            .withColumnRenamed("file_path", "_mf") \
-            .withColumnRenamed("g", "_mg")
-        missing = (univ.join(
-            seen, (F.col("file_path") == F.col("_mf"))
-            & F.col("g").eqNullSafe(F.col("_mg")), "left_anti"))
-        parts.append(missing.select(
-            "file_path", "g",
-            F.lit(None).cast("string").alias("h"),
-            F.lit(None).cast(cur_stype).alias("value"),
-            F.lit(None).cast("long").alias("pos"),
-            F.lit(0).cast("long").alias("n_nonnull")))
-    res = parts[0]
-    for p_ in parts[1:]:
-        res = res.unionByName(p_)
-    res.write.mode("append").parquet(d)
-    return len(todo)
+    gcols = ["g"] if g is not None else []
+
+    def make(todo):
+        src = column_source(
+            table, {"v": col, **({"g": group_col} if g else {})}, todo,
+            entries, with_pos=True)
+        nn = src.where(F.col("v").isNotNull())
+        part = ["file_path"] + gcols
+        w = W.partitionBy(*part).orderBy(
+            F.col("h").asc(), F.col("v").asc(), F.col("pos").asc())
+        # n_nonnull rides a window over the SAME partitioning (a groupBy
+        # + join would drop NULL groups on the equality join key)
+        cw = W.partitionBy(*part)
+        sampled = (nn.withColumn("h", sample_hash(F.col("v"),
+                                                  F.col("pos"), salt))
+                   .withColumn("n_nonnull",
+                               F.count(F.lit(1)).over(cw).cast("long"))
+                   .withColumn("_sr", F.row_number().over(w))
+                   .filter(F.col("_sr") <= k).drop("_sr"))
+        marker_g = ({"g": F.lit(None).cast(type_to_spark(g.type))}
+                    if g is not None else {})
+        empty = dict(h=F.lit(None).cast("string"),
+                     value=F.lit(None).cast(cur_stype),
+                     pos=F.lit(None).cast("long"))
+        parts = [
+            sampled.select("file_path", *gcols, "h",
+                           F.col("v").alias("value"), "pos", "n_nonnull"),
+            # all-NULL/empty files get a marker row: covered, nothing
+            # sampled
+            _markers(table, todo, nn, **marker_g, **empty,
+                     n_nonnull=F.lit(None if g is not None else 0)
+                     .cast("long"))]
+        if g is not None:
+            # grouped stores additionally record a marker per (file,
+            # GROUP) whose values are all NULL (r11: n_nonnull = 0, h
+            # NULL) — the store then enumerates the file's full group
+            # universe, which the SQL grouped-percentile route needs to
+            # emit Spark's NULL row for such groups with zero data I/O.
+            # The file-coverage marker above is distinguishable by
+            # n_nonnull IS NULL.
+            univ = src.select("file_path", "g").distinct()
+            seen = nn.select(F.col("file_path").alias("_mf"),
+                             F.col("g").alias("_mg")).distinct()
+            missing = univ.join(
+                seen, (F.col("file_path") == F.col("_mf"))
+                & F.col("g").eqNullSafe(F.col("_mg")), "left_anti")
+            parts.append(missing.select(
+                "file_path", "g", *[c.alias(n) for n, c in empty.items()],
+                F.lit(0).cast("long").alias("n_nonnull")))
+        return _union(parts)
+    return _sample_store(table, f, g, k, salt).build(entries, make)
 
 
 def _pos_delete_mask(table, entries, delete_entries):
@@ -1614,22 +1160,14 @@ def sample_store_groups(table, col: str, k: int = SAMPLE_DEFAULT_K,
     f, g = _sample_fields(table, col, group_col)
     if g is None:
         raise ValueError("group_col is required")
-    spark = table.spark
     entries, deletes = table._live_data_and_deletes()
     if deletes:
         return None
-    live = sorted({e.data_file.file_path for e in entries})
-    d = _sample_dir(table, f.field_id, k, g.field_id, salt)
-    if not live or not os.path.isdir(d) or not any(
-            p.endswith(".parquet") for p in os.listdir(d)):
+    live = {e.data_file.file_path for e in entries}
+    if not live:
         return None
-    paths_df = spark.createDataFrame([(p,) for p in live],
-                                     "file_path string")
-    store = (spark.read.parquet(d)
-             .join(paths_df, "file_path", "left_semi"))
-    cov_files = {r["file_path"] for r in
-                 store.select("file_path").distinct().collect()}
-    if set(live) - cov_files:
+    store, covered = _sample_store(table, f, g, k, salt).cover(live)
+    if live - covered:
         return None
     # sampled rows (h non-null) and all-NULL-group markers (h NULL,
     # n_nonnull = 0) name real groups; file-coverage markers for empty
@@ -1690,22 +1228,11 @@ def sampled_quantiles_from_store(table, col: str,
 
     from linkedin_iceberg_spark.operators.quantiles import _targets
     from linkedin_iceberg_spark.schema import type_to_spark
-    spark = table.spark
     cur_stype = type_to_spark(f.type)
     entries, deletes = table._live_data_and_deletes()
-    live = sorted({e.data_file.file_path for e in entries})
-    d = _sample_dir(table, f.field_id, k,
-                    g.field_id if g is not None else None, salt)
-    store = None
-    covered = set()
-    if live and os.path.isdir(d) and any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        paths_df = spark.createDataFrame([(p,) for p in live],
-                                         "file_path string")
-        store = (spark.read.parquet(d)
-                 .join(paths_df, "file_path", "left_semi"))
-        covered = {r["file_path"] for r in
-                   store.select("file_path").distinct().collect()}
+    live = {e.data_file.file_path for e in entries}
+    store, covered = (_sample_store(table, f, g, k, salt).cover(live)
+                      if live else (None, set()))
     gsel = ([F.col("g")] if g is not None else [])
     gcols = ["g"] if g is not None else []
     order = [F.col("h").asc(), F.col("_v").asc(), F.col("pos").asc()]
@@ -1738,7 +1265,7 @@ def sampled_quantiles_from_store(table, col: str,
                         v.alias("_v"), F.col("_pos").alias("pos")))
 
     src = sample = None
-    if live and set(live) <= covered:
+    if live and live <= covered:
         # store-served: k rows per (file[, group]) of metadata, no
         # data input
         src = (store.where(F.col("h").isNotNull())

@@ -14,13 +14,15 @@ at planning time); the 0.9-era reference stops at bounds
 null counts only), so this plane is additive, like the KMV/dictionary
 stores beside it.
 
-Layout: ``<location>/stats_bloom/<field_id>/*.parquet`` with one row per
-data file — ``(file_path, nbits, k, bits)``.  Keyed by FIELD ID so
-renames keep the store and a re-used name never sees a stale one.  Data
-files are immutable, so entries never go stale; ``analyze_bloom`` is
-incremental by construction (only live files missing from the store are
-scanned — appends sketch the new tail, compaction sketches the rewritten
-output).
+Layout (stats_store.py): one row per data file —
+``(file_path, nbits, k, bits)`` — under a directory keyed by FIELD ID
+and the column's current engine type: renames keep the store, a re-used
+name never sees a stale one, and int->long promotion (xxhash64 hashes
+the physical width) orphans the old store instead of mis-pruning with
+it.  Data files are immutable, so entries never go stale;
+``analyze_bloom`` is incremental by construction (only live files
+missing from the store are scanned — appends sketch the new tail,
+compaction sketches the rewritten output).
 
 Hashing: Spark's ``xxhash64`` (seed 42) over the value in the COLUMN'S
 OWN Spark type, computed executor-side at build time and by a one-row
@@ -48,31 +50,16 @@ depends on the filter.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import functions as F
+
+from linkedin_iceberg_spark.catalog import stats_store as S
 
 BLOOM_DEFAULT_FPP = 0.01
 BLOOM_MAX_BITS = 1 << 23  # 1 MiB of bits per (file, column)
 _BLOOM_TYPES = {"int", "long", "string", "date", "timestamp"}
 
 _OVERFLOW = -1  # nbits sentinel: too many distinct values, bits NULL
-
-
-def _bloom_dir(table, field_id: int) -> str:
-    """Field-id AND engine-type keyed (r11): xxhash64 is not stable
-    across type promotion (xxhash64(int) != xxhash64(long) — the JVM
-    hashes the physical width), so a store built pre-promotion would
-    never overlap post-promotion probe hashes and every file would be
-    wrongly pruned.  Keying the directory by the CURRENT engine type
-    makes promotion invalidate the store naturally: the probe finds no
-    store under the new type (keeps all files — sound), and the next
-    ANALYZE / stats.auto build lands under the new key."""
-    ftype = next((f.type for f in table.schema.fields
-                  if f.field_id == field_id), None)
-    leaf = str(field_id) if not isinstance(ftype, str) \
-        else f"{field_id}_{ftype}"
-    return os.path.join(table.location, "stats_bloom", leaf)
 
 
 def _params(n: int, fpp: float) -> tuple:
@@ -99,17 +86,6 @@ def _positions(u64, nbits: int, k: int):
     return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(nbits)
 
 
-def _field(table, col: str):
-    f = next((f for f in table.schema.fields if f.name == col), None)
-    if f is None:
-        raise ValueError(f"no such column {col!r}")
-    if not (isinstance(f.type, str) and f.type in _BLOOM_TYPES):
-        raise ValueError(
-            f"bloom stats support {sorted(_BLOOM_TYPES)} columns; "
-            f"{col!r} is {f.type!r}")
-    return f
-
-
 def analyze_bloom(table, col: str, fpp: float = BLOOM_DEFAULT_FPP,
                   max_bits: int = BLOOM_MAX_BITS) -> int:
     """Bring the column's bloom store up to date: sketch only the live
@@ -117,22 +93,11 @@ def analyze_bloom(table, col: str, fpp: float = BLOOM_DEFAULT_FPP,
     now."""
     if not (0.0 < fpp < 1.0):
         raise ValueError(f"fpp must be in (0, 1), got {fpp}")
-    f = _field(table, col)
-    spark = table.spark
+    from linkedin_iceberg_spark.catalog.analyze import _field, column_source
     from linkedin_iceberg_spark.shipping import ship_package
-    ship_package(spark)  # build/probe closures import _positions from here
-    d = _bloom_dir(table, f.field_id)
+    f = _field(table, col, _BLOOM_TYPES, "bloom")
+    ship_package(table.spark)  # build/probe closures import _positions
     entries, _ = table._live_data_and_deletes()
-    live = {e.data_file.file_path for e in entries}
-    have = set()
-    if os.path.isdir(d) and any(
-            p.endswith(".parquet") for p in os.listdir(d)):
-        have = {r["file_path"] for r in
-                spark.read.parquet(d)
-                .select("file_path").distinct().collect()}
-    todo = sorted(live - have)
-    if not todo:
-        return 0
 
     def build(pdf):
         import numpy as np
@@ -155,44 +120,42 @@ def analyze_bloom(table, col: str, fpp: float = BLOOM_DEFAULT_FPP,
         return pd.DataFrame([{"file_path": path, "nbits": nbits,
                               "k": k, "bits": bits.tobytes()}])
 
-    # schema-aware read (analyze.column_source): pre-rename files keep
-    # their values and pre-promotion values hash as the CURRENT type —
-    # matching _literal_hashes, which hashes probes as the current type
-    from linkedin_iceberg_spark.catalog.analyze import column_source
-    src = (column_source(table, col, todo, entries)
-           .select("file_path", F.xxhash64(F.col("v")).alias("h"))
-           .where(F.col("v").isNotNull())
-           .distinct())
-    # overflow files are decided from their distinct COUNT alone —
-    # never materialize a too-big hash group in a task just to throw
-    # it away (at the default cap a group tops out around ~875k hashes)
-    bits_per_val = -math.log(fpp) / (math.log(2) ** 2)
-    max_n = max(0, int(max_bits / bits_per_val) + 2)
-    while max_n > 0 and _params(max_n, fpp)[0] > max_bits:
-        max_n -= 1
-    counts = src.groupBy("file_path").agg(F.count("*").alias("n"))
-    under = counts.filter(F.col("n") <= max_n).select("file_path")
-    built = (src.join(under, "file_path", "left_semi")
-             .groupBy("file_path").applyInPandas(
-                 build, "file_path string, nbits long, k int, "
-                        "bits binary"))
-    paths_df = spark.createDataFrame([(p,) for p in todo],
-                                     "file_path string")
-    # all-NULL files produce no hash rows: empty bits (they can never
-    # satisfy eq/IN, so they always prune); over-cap files: overflow
-    # sentinel (recorded, never prunes)
-    merged = (paths_df
-              .join(counts, "file_path", "left")
-              .join(built, "file_path", "left")
-              .select("file_path",
-                      F.when(F.col("n").isNull(), F.lit(0))
-                      .when(F.col("n") > max_n, F.lit(_OVERFLOW))
-                      .otherwise(F.col("nbits")).alias("nbits"),
-                      F.coalesce(F.col("k"), F.lit(0)).alias("k"),
-                      F.when(F.col("n").isNull(), F.lit(b""))
-                      .otherwise(F.col("bits")).alias("bits")))
-    merged.write.mode("append").parquet(d)
-    return len(todo)
+    def make(todo):
+        # schema-aware read (analyze.column_source): pre-rename files
+        # keep their values and pre-promotion values hash as the CURRENT
+        # type — matching _literal_hashes, which hashes probes as the
+        # current type
+        src = (column_source(table, col, todo, entries)
+               .select("file_path", F.xxhash64(F.col("v")).alias("h"))
+               .where(F.col("v").isNotNull())
+               .distinct())
+        # overflow files are decided from their distinct COUNT alone —
+        # never materialize a too-big hash group in a task just to throw
+        # it away (at the default cap a group tops out around ~875k)
+        bits_per_val = -math.log(fpp) / (math.log(2) ** 2)
+        max_n = max(0, int(max_bits / bits_per_val) + 2)
+        while max_n > 0 and _params(max_n, fpp)[0] > max_bits:
+            max_n -= 1
+        counts = src.groupBy("file_path").agg(F.count("*").alias("n"))
+        under = counts.filter(F.col("n") <= max_n).select("file_path")
+        built = (src.join(under, "file_path", "left_semi")
+                 .groupBy("file_path").applyInPandas(
+                     build, "file_path string, nbits long, k int, "
+                            "bits binary"))
+        # all-NULL files produce no hash rows: empty bits (they can never
+        # satisfy eq/IN, so they always prune); over-cap files: overflow
+        # sentinel (recorded, never prunes)
+        return (S.paths_frame(table.spark, todo)
+                .join(counts, "file_path", "left")
+                .join(built, "file_path", "left")
+                .select("file_path",
+                        F.when(F.col("n").isNull(), F.lit(0))
+                        .when(F.col("n") > max_n, F.lit(_OVERFLOW))
+                        .otherwise(F.col("nbits")).alias("nbits"),
+                        F.coalesce(F.col("k"), F.lit(0)).alias("k"),
+                        F.when(F.col("n").isNull(), F.lit(b""))
+                        .otherwise(F.col("bits")).alias("bits")))
+    return S.store(table, "bloom", f.field_id).build(entries, make)
 
 
 def _literal_hashes(table, field, lits: list):
@@ -234,14 +197,11 @@ def prune_files_by_hashes(table, field_id: int, candidates: set,
     spark = table.spark
     if spark is None or not hashes or not candidates:
         return set()
-    d = _bloom_dir(table, field_id)
-    if not os.path.isdir(d) or not any(
-            p.endswith(".parquet") for p in os.listdir(d)):
+    rows = S.store(table, "bloom", field_id).rows(candidates)
+    if rows is None:
         return set()
     from linkedin_iceberg_spark.shipping import ship_package
     ship_package(spark)
-    cand_df = spark.createDataFrame(
-        [(p,) for p in sorted(candidates)], "file_path string")
     import numpy as _np
     hs_bytes = _np.array([h & 0xFFFFFFFFFFFFFFFF for h in hashes],
                          dtype=_np.uint64).tobytes()  # 8 B/key closure
@@ -278,10 +238,7 @@ def prune_files_by_hashes(table, field_id: int, candidates: set,
             yield pd.DataFrame({"file_path": gone})
 
     try:
-        excluded = (spark.read.parquet(d)
-                    .join(cand_df, "file_path", "left_semi")
-                    .mapInPandas(probe, "file_path string")
-                    .collect())
+        excluded = rows.mapInPandas(probe, "file_path string").collect()
     except Exception:
         return set()  # malformed store: no advice, stay sound
     return {r["file_path"] for r in excluded} & set(candidates)
@@ -296,49 +253,22 @@ def bloom_prune(table, data_entries: list, bound) -> list:
     only an unpruned file, never a row.  Called from plan_files when the
     table has a stats_bloom directory; advisory only, same contract as
     dictionary_prune."""
-    from linkedin_iceberg_spark.expressions.expressions import (
-        And, BoundReference, Operation, Predicate)
-
-    conjuncts = []
-
-    def walk(e):
-        if isinstance(e, And):
-            walk(e.left)
-            walk(e.right)
-        elif isinstance(e, Predicate) and \
-                isinstance(e.term, BoundReference) and \
-                isinstance(e.term.type, str) and \
-                e.term.type in _BLOOM_TYPES:
-            if e.op == Operation.EQ:
-                conjuncts.append((e.term.field_id, [e.literal]))
-            elif e.op == Operation.IN:
-                conjuncts.append((e.term.field_id, sorted(e.literals)))
-
-    walk(bound)
-    if not conjuncts:
+    from linkedin_iceberg_spark.catalog.analyze import (
+        _without, eq_in_conjuncts)
+    conjuncts = eq_in_conjuncts(bound, _BLOOM_TYPES)
+    if not conjuncts or table.spark is None:
+        # no eq/IN shape — or a Spark-less planning context (Python
+        # DataSource planning worker), where probing needs the JVM
+        # xxhash64: no advice, the pushed filter re-applies row-level
         return data_entries
-    spark = table.spark
-    if spark is None:
-        # Spark-less planning context (Python DataSource planning
-        # worker): probing needs the JVM xxhash64 — no advice, the
-        # pushed filter re-applies row-level, correctness unchanged
-        return data_entries
-    from linkedin_iceberg_spark.shipping import ship_package
-    ship_package(spark)
     fields_by_id = {f.field_id: f for f in table.schema.fields}
     candidates = {e.data_file.file_path for e in data_entries}
     drop: set = set()
     for fid, lits in conjuncts:
-        d = _bloom_dir(table, fid)
         field = fields_by_id.get(fid)
-        if field is None or not os.path.isdir(d) or not any(
-                p.endswith(".parquet") for p in os.listdir(d)):
+        if field is None or not S.store(table, "bloom", fid).exists():
             continue
         hashes = _literal_hashes(table, field, lits)
-        if hashes is None:
-            continue
-        drop |= prune_files_by_hashes(table, fid, candidates, hashes)
-    if not drop:
-        return data_entries
-    return [e for e in data_entries
-            if e.data_file.file_path not in drop]
+        if hashes is not None:
+            drop |= prune_files_by_hashes(table, fid, candidates, hashes)
+    return _without(data_entries, drop)

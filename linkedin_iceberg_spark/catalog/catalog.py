@@ -2486,45 +2486,11 @@ class Catalog:
                     rows.append(("Identifier Fields",
                                  ",".join(t.identifier_fields), ""))
                 # statistics-plane coverage: which columns carry
-                # persisted HLL/KMV/dictionary stores (directory names
-                # only — zero store I/O)
-                stats = []
-                for sub, label in (("stats", "hll"),
-                                   ("stats_kmv", "kmv"),
-                                   ("stats_dict", "dict"),
-                                   ("stats_bloom", "bloom"),
-                                   ("stats_hist", "hist"),
-                                   ("stats_topk", "topk")):
-                    base = os.path.join(t.location, sub)
-                    if os.path.isdir(base):
-                        names = sorted(os.listdir(base))
-                        if sub in ("stats", "stats_kmv", "stats_dict",
-                                   "stats_hist"):
-                            # every plane is FIELD-ID keyed (r9: hll +
-                            # kmv joined the others); orphaned dirs of
-                            # dropped columns keep their raw id
-                            names = [t.schema.name_for_id(int(fid))
-                                     or fid for fid in names
-                                     if str(fid).isdigit()]
-                        elif sub == "stats_bloom":
-                            # r11: "<fid>_<engine type>" — the store is
-                            # type-keyed (xxhash64 is not promotion-
-                            # stable); legacy plain-id dirs still parse
-                            names = [t.schema.name_for_id(int(p0)) or n
-                                     for n in names
-                                     for p0 in [n.partition("_")[0]]
-                                     if p0.isdigit()]
-                        elif sub == "stats_topk":
-                            # dir names are "<fid>_m<m>"
-                            out_n = []
-                            for n in names:
-                                fid, _, mm = n.partition("_m")
-                                cn = (t.schema.name_for_id(int(fid))
-                                      if fid.isdigit() else None)
-                                out_n.append(f"{cn or n}({mm})"
-                                             if mm else (cn or n))
-                            names = out_n
-                        stats.append(f"{label}:{','.join(names)}")
+                # persisted per-file stores (directory names only —
+                # zero store I/O)
+                from linkedin_iceberg_spark.catalog.stats_store import (
+                    describe)
+                stats = describe(t)
                 if stats:
                     rows.append(("Statistics", "; ".join(stats), ""))
                 for k in sorted(t.properties):

@@ -879,9 +879,8 @@ def vacuum_stats(table, dry_run: bool = False) -> dict:
     """GC the advisory stats planes (r10): drop store rows whose
     ``file_path`` is referenced by NO snapshot.
 
-    Every file-skipping plane — stats/ (sketches), stats_kmv/,
-    stats_dict/, stats_dict_pair/, stats_hist/, stats_topk/,
-    stats_bloom/ — keys its rows by immutable data-file path, so
+    Every per-file stats plane (the kinds of stats_store.py) keys its
+    rows by immutable data-file path, so
     entries never go STALE; but after compaction / expiry the dead
     paths linger and every plan-time probe scans them forever.  This
     action rewrites each leaf store with only the rows whose path some
@@ -904,8 +903,6 @@ def vacuum_stats(table, dry_run: bool = False) -> dict:
     coalesces to one part (a store is ~bytes-per-file, not per-row).
 
     Returns {"rows_dropped": total, "stores": {relpath: dropped}}."""
-    import shutil
-
     table.refresh()
     spark = table.spark
     md = table.metadata
@@ -921,50 +918,14 @@ def vacuum_stats(table, dry_run: bool = False) -> dict:
     else:
         valid = spark.createDataFrame([], "file_path string")
 
-    # collect leaf store dirs first (the swap below renames dirs).
-    # Leftover .vacuum_tmp/.vacuum_old dirs from a run that died
-    # mid-swap are NOT leaves (they'd otherwise be re-vacuumed as if
-    # live, and their presence would fail this run's own renames) —
-    # they are cleared before each swap instead.
-    leaves = []
-    root = md.location
-    for d in sorted(os.listdir(root)):
-        if not d.startswith("stats"):
-            continue
-        for sub, dirs, files in os.walk(os.path.join(root, d)):
-            dirs[:] = [x for x in dirs
-                       if not (x.endswith(".vacuum_tmp")
-                               or x.endswith(".vacuum_old"))]
-            if any(f.endswith(".parquet") for f in files):
-                leaves.append(sub)
-
+    # collect leaf stores first (the swap renames dirs); leftovers of
+    # a run that died mid-swap are not leaves (stats_store.leaves)
+    from linkedin_iceberg_spark.catalog.stats_store import leaves
     stores: dict = {}
-    total_dropped = 0
-    for sub in leaves:
-        df = spark.read.parquet(sub)
-        if "file_path" not in df.columns:
-            continue
-        n_all = df.count()
-        kept = df.join(valid, "file_path", "left_semi")
-        n_keep = kept.count()
-        if n_keep == n_all:
-            continue
-        rel = os.path.relpath(sub, root)
-        stores[rel] = n_all - n_keep
-        total_dropped += n_all - n_keep
-        if dry_run:
-            continue
-        tmp = sub + ".vacuum_tmp"
-        old = sub + ".vacuum_old"
-        # crash-safe against our own leftovers: a prior run that died
-        # between renames leaves tmp/old dirs that would fail this
-        # swap's renames — clear them first (old is a pre-GC copy, tmp
-        # a partial write; both are rebuildable advisory data)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.rename(sub, old)
-        os.rename(tmp, sub)
-        shutil.rmtree(old, ignore_errors=True)
+    for store in leaves(table):
+        dropped = store.retain(valid, dry_run)
+        if dropped:
+            stores[os.path.relpath(store.path, md.location)] = dropped
+    total_dropped = sum(stores.values())
     return {"rows_dropped": total_dropped, "stores": stores,
             "dry_run": dry_run}

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from linkedin_iceberg_spark.catalog import manifests as M
 from linkedin_iceberg_spark.catalog import plan_vectorized as PV
+from linkedin_iceberg_spark.catalog import stats_store as S
 from linkedin_iceberg_spark.catalog.metadata import TableMetadata
 from linkedin_iceberg_spark.expressions import (
     Evaluator,
@@ -545,49 +546,45 @@ class TableScan:
         from linkedin_iceberg_spark.catalog import analyze as AN
         if k is None:
             k = AN.KMV_DEFAULT_K
-        if self.table.schema.id_for_name(col) is None:
+        return AN.kmv_estimate(self._kmv_bottomk(col, k), k)
+
+    def _kmv_bottomk(self, col: str, k: int) -> list:
+        """The scan's merged bottom-k hash list behind approx_ndv (and
+        the table-overlap audit): store-served for covered decided
+        delete-free files, live-hashed with the same recipe for the
+        rest."""
+        from linkedin_iceberg_spark.catalog import analyze as AN
+        fid = self.table.schema.id_for_name(col)
+        if fid is None:
             raise ValueError(f"no such column {col!r}")
-        tasks = self.plan_files()
         fast, slow = [], []
-        for t in tasks:
+        for t in self.plan_files():
             decided = self.row_filter is None or \
                 isinstance(t.residual, AlwaysTrue)
             (fast if decided and not t.deletes else slow).append(t)
-        spark = self.table.spark
-        d = AN._kmv_dir(self.table, col, k)
-        covered: set = set()
         frames = []
-        if fast and os.path.isdir(d) and any(
-                f.endswith(".parquet") for f in os.listdir(d)):
-            store = spark.read.parquet(d)
-            want = {t.file.file_path for t in fast}
-            paths_df = spark.createDataFrame(
-                [(p,) for p in sorted(want)], "file_path string")
-            hit = store.join(paths_df, "file_path", "left_semi")
-            covered = {r["file_path"] for r in
-                       hit.select("file_path").distinct().collect()}
-            frames.append(hit.select("h"))
-        live_fast = [t for t in fast if t.file.file_path not in covered]
+        covered: set = set()
+        if fast:
+            store, covered = S.store(self.table, "kmv", fid, k=k).cover(
+                t.file.file_path for t in fast)
+            if store is not None:
+                frames.append(store.select("h"))
+        live_fast = [t.file.file_path for t in fast
+                     if t.file.file_path not in covered]
         if live_fast:
-            paths = [t.file.file_path for t in live_fast]
             # schema-aware live hash (analyze.column_source): a
             # current-name read nulls out pre-rename files' values,
             # silently undercounting NDV until the store covers them
-            frames.append(
-                AN.column_source(self.table, col, paths)
-                .select(AN._kmv_hash("v").alias("h")))
+            frames.append(AN.column_source(self.table, col, live_fast)
+                          .select(AN._kmv_hash("v").alias("h")))
         if slow:
             frames.append(self._to_df_default(tasks=slow)
                           .select(AN._kmv_hash(col).alias("h")))
         if not frames:
-            return 0
-        merged = frames[0]
-        for f_ in frames[1:]:
-            merged = merged.unionByName(f_)
-        hs = [r["h"] for r in
-              merged.where(F.col("h").isNotNull()).distinct()
-              .orderBy("h").limit(k).collect()]
-        return AN.kmv_estimate(hs, k)
+            return []
+        return [r["h"] for r in
+                AN._union(frames).where(F.col("h").isNotNull()).distinct()
+                .orderBy("h").limit(k).collect()]
 
     def exact_ndv_from_dict(self, col: str):
         """EXACT COUNT(DISTINCT col) from the dictionary store
@@ -598,13 +595,11 @@ class TableScan:
         distinct count is |union of the sets| — not an estimate.  Any
         gap (uncovered file, overflow marker, pending deletes, partial
         residual) returns None and the caller takes the real scan."""
-        from linkedin_iceberg_spark.catalog import analyze as AN
         fid = self.table.schema.id_for_name(col)
         if fid is None:
             raise ValueError(f"no such column {col!r}")
-        d = AN._dict_dir(self.table, fid)
-        if not os.path.isdir(d) or not any(
-                f.endswith(".parquet") for f in os.listdir(d)):
+        store = S.store(self.table, "dict", fid)
+        if not store.exists():
             return None
         tasks = self.plan_files()
         for t in tasks:
@@ -614,21 +609,12 @@ class TableScan:
                 return None
         if not tasks:
             return 0
-        spark = self.table.spark
-        paths_df = spark.createDataFrame(
-            [(t.file.file_path,) for t in
-             sorted(tasks, key=lambda t: t.file.file_path)],
-            "file_path string")
-        store = spark.read.parquet(d).join(paths_df, "file_path",
-                                           "left_semi")
         # coverage/overflow gate first, then the exact set union
-        cov = store.agg(
-            F.count_distinct("file_path").alias("n"),
-            F.sum(F.when(F.col("values").isNull(), 1).otherwise(0))
-            .alias("overflow")).head()
-        if cov["n"] < len(tasks) or (cov["overflow"] or 0) > 0:
+        rows, covered = store.cover([t.file.file_path for t in tasks],
+                                    where=F.col("values").isNotNull())
+        if len(covered) < len(tasks):
             return None
-        return (store.select(F.explode("values").alias("v"))
+        return (rows.select(F.explode("values").alias("v"))
                 .agg(F.count_distinct("v")).head()[0] or 0)
 
     def exact_ndv_from_dict_grouped(self, group_cols: list, col: str):
@@ -640,13 +626,11 @@ class TableScan:
         estimate which degrades per file)."""
         from pyspark.sql import types as ST
 
-        from linkedin_iceberg_spark.catalog import analyze as AN
         fid = self.table.schema.id_for_name(col)
         if fid is None:
             raise ValueError(f"no such column {col!r}")
-        d = AN._dict_dir(self.table, fid)
-        if not os.path.isdir(d) or not any(
-                f.endswith(".parquet") for f in os.listdir(d)):
+        store = S.store(self.table, "dict", fid)
+        if not store.exists():
             return None
         types = {f.name: f.type for f in self.table.schema.fields}
         if not all(isinstance(types.get(c), str)
@@ -673,14 +657,11 @@ class TableScan:
             [ST.StructField(c, sfields[c], True) for c in group_cols])
         keys_df = spark.createDataFrame(
             [(p, *k) for p, k in sorted(keys.items())], key_schema)
-        store = spark.read.parquet(d).join(keys_df, "file_path")
-        cov = store.agg(
-            F.count_distinct("file_path").alias("n"),
-            F.sum(F.when(F.col("values").isNull(), 1).otherwise(0))
-            .alias("overflow")).head()
-        if cov["n"] < len(keys) or (cov["overflow"] or 0) > 0:
+        rows, covered = store.cover(keys_df,
+                                    where=F.col("values").isNotNull())
+        if len(covered) < len(keys):
             return None
-        rows = (store.select(*group_cols,
+        rows = (rows.select(*group_cols,
                              F.explode("values").alias("v"))
                 .groupBy(*group_cols)
                 .agg(F.count_distinct("v").alias("_d")).collect())
@@ -729,23 +710,20 @@ class TableScan:
                 fast[t.file.file_path] = key
             else:
                 slow.append(t)
-        d = AN._kmv_dir(self.table, col, k)
-        frames = []
-        covered: set = set()
         sfields = {f.name: f.dataType
                    for f in self.table.schema.to_spark().fields}
         key_schema = ST.StructType(
             [ST.StructField("file_path", ST.StringType(), False)] +
             [ST.StructField(c, sfields[c], True) for c in group_cols])
-        if fast and os.path.isdir(d) and any(
-                f.endswith(".parquet") for f in os.listdir(d)):
-            keys_df = spark.createDataFrame(
-                [(p, *key) for p, key in sorted(fast.items())],
-                key_schema)
-            store = spark.read.parquet(d).join(keys_df, "file_path")
-            covered = {r["file_path"] for r in
-                       store.select("file_path").distinct().collect()}
-            frames.append(store.select(*group_cols, "h"))
+        frames = []
+        covered: set = set()
+        if fast:
+            store, covered = S.store(
+                self.table, "kmv", self.table.schema.id_for_name(col), k=k
+            ).cover(spark.createDataFrame(
+                [(p, *key) for p, key in sorted(fast.items())], key_schema))
+            if store is not None:
+                frames.append(store.select(*group_cols, "h"))
         live_fast = [p for p in fast if p not in covered]
         if live_fast:
             # schema-aware live hash; group-key values come from the
@@ -764,11 +742,8 @@ class TableScan:
                                   AN._kmv_hash(col).alias("h")))
         if not frames:
             return {}
-        merged = frames[0]
-        for f_ in frames[1:]:
-            merged = merged.unionByName(f_)
         w = SW.partitionBy(*group_cols).orderBy("h")
-        summary = (merged.where(F.col("h").isNotNull()).distinct()
+        summary = (AN._union(frames).where(F.col("h").isNotNull()).distinct()
                    .withColumn("_rk", F.row_number().over(w))
                    .filter(F.col("_rk") <= k)
                    .groupBy(*group_cols)
@@ -871,9 +846,7 @@ class TableScan:
         # the literals (bounds can't: an unsorted column's min/max spans
         # the domain in every file).  Advisory only; absent store = no-op.
         if data_entries and self.row_filter is not None and \
-                (os.path.isdir(os.path.join(table.location, "stats_dict"))
-                 or os.path.isdir(os.path.join(table.location,
-                                               "stats_dict_pair"))):
+                S.planted(table, "dict", "dict_pair"):
             from linkedin_iceberg_spark.catalog import analyze as AN
             data_entries = AN.dictionary_prune(table, data_entries, bound)
 
@@ -883,7 +856,7 @@ class TableScan:
         # absent.  One-sided (false positives only cost an unpruned
         # file); advisory only; absent store = no-op.
         if data_entries and self.row_filter is not None and \
-                os.path.isdir(os.path.join(table.location, "stats_bloom")):
+                S.planted(table, "bloom"):
             from linkedin_iceberg_spark.catalog import bloom as BL
             data_entries = BL.bloom_prune(table, data_entries, bound)
 

@@ -512,46 +512,9 @@ class Table:
         spec = (self.properties or {}).get("stats.auto")
         if not spec:
             return
-        from linkedin_iceberg_spark.catalog import analyze as AN
+        from linkedin_iceberg_spark.catalog.stats_store import auto_analyze
         try:
-            for part in spec.split(";"):
-                if ":" not in part:
-                    continue
-                kind, cols = part.split(":", 1)
-                names = [c.strip() for c in cols.split(",") if c.strip()]
-                if kind.strip().lower() == "kmv" and names:
-                    AN.analyze_table_kmv(self, names)
-                elif kind.strip().lower() == "dict":
-                    for c in names:
-                        AN.analyze_dictionary(self, c)
-                elif kind.strip().lower() == "bloom":
-                    from linkedin_iceberg_spark.catalog import bloom as BL
-                    for c in names:
-                        BL.analyze_bloom(self, c)
-                elif kind.strip().lower() == "hist":
-                    for c in names:
-                        AN.analyze_histogram(self, c)
-                elif kind.strip().lower() == "topk":
-                    for c in names:
-                        AN.analyze_topk(self, c)
-                elif kind.strip().lower() == "sample":
-                    # grouped stores spell their group column with '@':
-                    # ``sample:len@lang`` keeps the per-(file, group)
-                    # bottom-k maintained at write time (r11) — grouped
-                    # percentile SQL stays store-served with no manual
-                    # CALL cadence
-                    for c in names:
-                        col, _, grp = c.partition("@")
-                        AN.analyze_sample(self, col.strip(),
-                                          group_col=grp.strip() or None)
-                elif kind.strip().lower() == "dictpair":
-                    # pairs spell their two columns with '+':
-                    # ``dictpair:lang+source,status+priority`` (r10)
-                    for c in names:
-                        pair = [p.strip() for p in c.split("+")
-                                if p.strip()]
-                        if len(pair) == 2:
-                            AN.analyze_dictionary_pair(self, pair)
+            auto_analyze(self, spec)
         except Exception:
             pass  # stats are advisory; the write already committed
 

@@ -43,6 +43,10 @@ def cosine_topk(df: DataFrame, query_vec, k: int, id_col: str = "vec_id",
     vc = f"`{vec_col}`"
     qarr = "array(" + ",".join(f"{float(x)!r}D" for x in query_vec) + ")"
     qnorm = math.sqrt(sum(float(x) * float(x) for x in query_vec))
+    if qnorm == 0:
+        # every cosine would divide by zero (NULL cos_sim, arbitrary
+        # order): the zero vector has no direction to rank against
+        raise ValueError("cosine_topk: query_vec must be non-zero")
     dot = (f"aggregate(zip_with({vc}, {qarr}, "
            f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)")
     nrm = (f"sqrt(aggregate({vc}, 0.0D, (acc, v) -> "

@@ -11,9 +11,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _slow_test_ids() -> set:
-    """Node ids (file.py::test[param]) of the slow tier — the longest
-    stress/fuzz/sweep tests, measured with --durations=0 (r12); kept as a
-    data file so the tier is auditable and regenerable."""
+    """Node ids (tests/file.py::test[param]) of the slow tier — the
+    longest stress/fuzz/sweep tests, measured with --durations=0 (r12);
+    kept as a data file so the tier is auditable and regenerable."""
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "slow_tests.txt")
     try:
@@ -24,13 +24,21 @@ def _slow_test_ids() -> set:
         return set()
 
 
+FULL_SUITE = 'python -m pytest tests/ -q -m "slow or not slow"'
+
+
+def pytest_report_header(config):
+    n = len(_slow_test_ids())
+    if config.getoption("markexpr", "") == "not slow":
+        return (f"slow tier: {n} tests in tests/slow_tests.txt deselected; "
+                f"full suite: {FULL_SUITE}")
+    return f"slow tier: {n} tests in tests/slow_tests.txt"
+
+
 def pytest_collection_modifyitems(config, items):
     slow = _slow_test_ids()
-    if not slow:
-        return
     for item in items:
-        rel = os.path.basename(item.fspath.strpath) + "::" + item.name
-        if rel in slow:
+        if item.nodeid in slow:
             item.add_marker(pytest.mark.slow)
 
 

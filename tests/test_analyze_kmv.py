@@ -336,9 +336,15 @@ def test_call_kmv_overlap_and_describe_stats(spark, catalog):
     ta.refresh(); tb.refresh()
     assert out == kmv_table_overlap(ta, "o_custkey", tb, "o_custkey",
                                     k=64)
+    from linkedin_iceberg_spark.catalog.analyze import (
+        analyze_dictionary_pair, analyze_sample)
+    analyze_sample(ta, "o_custkey", k=16, group_col="o_orderpriority")
+    analyze_dictionary_pair(ta, ["o_orderpriority", "o_orderstatus"])
     rows = {r["col_name"]: r["data_type"] for r in
             catalog.sql("DESCRIBE EXTENDED db.ka").collect()}
     assert "kmv:o_custkey" in rows["Statistics"]
+    assert "sample:o_custkey@o_orderpriority(16)" in rows["Statistics"]
+    assert "dict_pair:o_orderstatus+o_orderpriority" in rows["Statistics"]
 
 
 def test_call_key_index_and_auto_stats_after_compaction(spark, catalog):

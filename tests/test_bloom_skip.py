@@ -270,10 +270,10 @@ def test_store_duplication_invariance(spark, catalog):
     key = int(_midkey(o))
     before = len(t.new_scan().filter(eq("o_custkey", key)).plan_files())
     analyze_bloom(t, "o_custkey")
-    from linkedin_iceberg_spark.catalog.bloom import _bloom_dir
+    from linkedin_iceberg_spark.catalog.stats_store import store
     fid = next(f.field_id for f in t.schema.fields
                if f.name == "o_custkey")
-    d = _bloom_dir(t, fid)
+    d = store(t, "bloom", fid).path
     spark.read.parquet(d).write.mode("append").parquet(d)
     scan = t.new_scan().filter(eq("o_custkey", key))
     assert len(scan.plan_files()) < before

@@ -97,13 +97,12 @@ def test_duplicate_store_rows_harmless(spark, catalog):
     analyze_dictionary(t, "o_orderpriority")
     analyze_table_kmv(t, ["o_custkey"], k=64)
     # simulate the race: append an exact copy of each store
-    from linkedin_iceberg_spark.catalog.analyze import (
-        _dict_dir, _kmv_dir)
+    from linkedin_iceberg_spark.catalog.stats_store import store
     fid = t.schema.id_for_name("o_orderpriority")
-    dd = _dict_dir(t, fid)
+    dd = store(t, "dict", fid).path
     spark.read.parquet(dd).write.mode("append").parquet(dd + ".tmp")
     spark.read.parquet(dd + ".tmp").write.mode("append").parquet(dd)
-    kd = _kmv_dir(t, "o_custkey", 64)
+    kd = store(t, "kmv", t.schema.id_for_name("o_custkey"), k=64).path
     spark.read.parquet(kd).write.mode("append").parquet(kd + ".tmp")
     spark.read.parquet(kd + ".tmp").write.mode("append").parquet(kd)
     prio = o.select("o_orderpriority").first()[0]

@@ -237,3 +237,19 @@ def test_cosine_topk_quoting_and_nonfinite_guard(spark):
         cosine_topk(df, [float("nan"), 1.0], k=1, vec_col="my vec")
     with pytest.raises(ValueError, match="finite"):
         cosine_topk(df, [float("inf"), 1.0], k=1, vec_col="my vec")
+
+
+def test_cosine_topk_rejects_zero_query_vector(spark):
+    """An all-zero query vector has no direction: every cosine divides by
+    zero (NULL cos_sim, arbitrary order), so it is rejected up front
+    like a non-finite one."""
+    import pytest
+
+    from linkedin_iceberg_spark.operators.similarity import cosine_topk
+
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+                               "vec_id int, embedding array<double>")
+    with pytest.raises(ValueError, match="non-zero"):
+        cosine_topk(df, [0.0, 0.0], k=1)
+    with pytest.raises(ValueError, match="non-zero"):
+        cosine_topk(df, [], k=1)

@@ -69,9 +69,9 @@ def _poisoned(t, df):
 def _stored_positions(spark, t, k, n_per_file=2):
     """A few (file_path, pos) pairs that ARE in the store — deleting
     them exercises the mask against stored rows."""
-    from linkedin_iceberg_spark.catalog.analyze import _sample_dir
+    from linkedin_iceberg_spark.catalog.stats_store import store
     fid = t.schema.id_for_name("x")
-    d = _sample_dir(t, fid, k)
+    d = store(t, "sample", fid, k=k).path
     rows = (spark.read.parquet(d).where(F.col("h").isNotNull())
             .select("file_path", "pos").collect())
     by_file = {}
@@ -160,10 +160,10 @@ def test_equality_deletes_still_live(tbl, spark):
 
 def test_grouped_pos_deletes_store_served(tbl, spark):
     assert analyze_sample(tbl, "x", k=32, group_col="s") == 5
-    from linkedin_iceberg_spark.catalog.analyze import _sample_dir
+    from linkedin_iceberg_spark.catalog.stats_store import store
     fid = t_fid = tbl.schema.id_for_name("x")
     gid = tbl.schema.id_for_name("s")
-    d = _sample_dir(tbl, t_fid, 32, gid)
+    d = store(tbl, "sample", t_fid, gid, k=32).path
     rows = (spark.read.parquet(d).where(F.col("h").isNotNull())
             .select("file_path", "pos").limit(6).collect())
     pos = spark.createDataFrame([(r["file_path"], r["pos"])

@@ -14,10 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from linkedin_iceberg_spark.catalog.analyze import (
-    _sample_dir,
     analyze_sample,
     sampled_quantiles_from_store,
 )
+from linkedin_iceberg_spark.catalog.stats_store import store
 
 
 @pytest.fixture()
@@ -237,7 +237,7 @@ def test_vacuum_gcs_sample_store_and_serving_survives(tbl, spark):
     rel = [s for s in out["stores"] if s.startswith("stats_sample")]
     assert rel and out["stores"][rel[0]] > 0
     live = {e.data_file.file_path for e in t._live_data_and_deletes()[0]}
-    d = _sample_dir(t, t.schema.id_for_name("x"), 64)
+    d = store(t, "sample", t.schema.id_for_name("x"), k=64).path
     kept = {r["file_path"] for r in spark.read.parquet(d)
             .select("file_path").distinct().collect()}
     assert kept == live
@@ -284,5 +284,5 @@ def test_call_and_stats_auto(catalog, spark):
     # the write maintained the store: nothing left to analyze
     out = catalog.sql("CALL analyze_sample('db.sampauto', 'x')").head()
     assert json.loads(out["detail"])["files_analyzed"] == 0
-    d = _sample_dir(t, t.schema.id_for_name("x"), 1024)
+    d = store(t, "sample", t.schema.id_for_name("x"), k=1024).path
     assert os.path.isdir(d)

@@ -114,9 +114,14 @@ def test_call_procedures_and_describe(spark, catalog):
     assert [(r["value"], r["lower"]) for r in rows] == \
         [(str(v), n) for v, n in top3]
     assert all(r["guaranteed"] for r in rows)
+    catalog.sql("CALL analyze_sample('db.call', 'o_custkey', 16)")
+    catalog.sql("CALL analyze_dictionary_pair('db.call', "
+                "'o_orderstatus', 'o_orderpriority')")
     d = {x["col_name"]: x["data_type"]
          for x in catalog.sql("DESCRIBE EXTENDED db.call").collect()}
     assert "topk:o_orderpriority(16)" in d.get("Statistics", "")
+    assert "sample:o_custkey(16)" in d["Statistics"]
+    assert "dict_pair:o_orderstatus+o_orderpriority" in d["Statistics"]
 
 
 def test_bad_args(spark, catalog):
