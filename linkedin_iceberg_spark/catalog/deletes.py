@@ -99,7 +99,7 @@ def _read_group_with_positions(spark: SparkSession, md, schema_id: int,
     per-file row counter is the same ROW_POSITION — so position deletes
     and the reserved metadata columns are format-agnostic, matching the
     reference's delete machinery (core/.../deletes/Deletes.java:60-127)."""
-    from linkedin_iceberg_spark.catalog.scan import align_columns
+    from linkedin_iceberg_spark.catalog.scan import align_columns, load_file_group
     schema = md.schema
     written = md.schema_by_id(schema_id)
     paths = [f.file_path for f in gfiles]
@@ -113,11 +113,8 @@ def _read_group_with_positions(spark: SparkSession, md, schema_id: int,
                   for f in gfiles} if base_path is not None else None
         base = read_orc_files(spark, paths, written, pconst)
     else:
-        reader = spark.read.schema(written.to_spark()).format(fmt)
-        if base_path is not None:
-            # in-place imported files: partition columns come from the paths
-            reader = reader.option("basePath", base_path)
-        base = reader.load(paths) \
+        base = load_file_group(spark, fmt, base_path, written.to_spark(),
+                                paths) \
             .withColumn("_file", F.regexp_replace(
                 F.col("_metadata.file_path"), "^file:", "")) \
             .withColumn("_pos", F.col("_metadata.row_index"))

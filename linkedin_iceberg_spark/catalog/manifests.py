@@ -22,6 +22,7 @@ from typing import Optional
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from linkedin_iceberg_spark.catalog.cache import BoundedCache, file_signature
 from linkedin_iceberg_spark.catalog.serde import decode_value, encode_value
 
 # entry status (ref: ManifestEntry.Status)
@@ -111,14 +112,6 @@ def _encode_bounds(bounds: dict, types_by_id: dict) -> str:
                        for k, v in bounds.items()})
 
 
-def _decode_bounds(s: str, types_by_id: dict) -> dict:
-    if not s:
-        return {}
-    raw = json.loads(s)
-    return {int(k): decode_value(v, types_by_id.get(int(k), "string"))
-            for k, v in raw.items()}
-
-
 def _encode_partition(partition: dict, ptypes: dict) -> str:
     return json.dumps({k: encode_value(v, ptypes.get(k, "string"))
                        for k, v in partition.items()})
@@ -188,15 +181,11 @@ def _decode_json_column(col: list, transform) -> list:
     return out
 
 
-# manifest parquet files are IMMUTABLE once committed (writers always
-# create new uuid-named files; compaction writes replacements), so the
-# decoded pyarrow Table — itself immutable — can be served from a
-# process-wide cache keyed on (path, mtime).  Same discipline as
-# metadata.py's _METADATA_CACHE: metadata only, bounded, mtime-guarded
-# against an out-of-band rewrite.  This is the analog of the reference's
-# manifest caching (ref: core/.../ManifestFiles.java CONTENT_CACHES).
-_MANIFEST_TABLE_CACHE: "dict[tuple, pa.Table]" = {}
-_MANIFEST_TABLE_CACHE_MAX = 512
+# decoded manifests by (path, mtime_ns): manifest files are immutable once
+# committed (writers always create new uuid-named files), and so is the
+# decoded pyarrow Table; the mtime guards against an out-of-band rewrite.
+_MANIFEST_TABLE_CACHE = BoundedCache(max_entries=512, max_bytes=256 << 20,
+                                     size=lambda t: t.nbytes)
 
 
 def read_manifest_table(path: str) -> "pa.Table":
@@ -204,17 +193,9 @@ def read_manifest_table(path: str) -> "pa.Table":
     input to both the materializing read below and the vectorized planner
     (catalog/plan_vectorized.py), which filters column vectors BEFORE
     paying per-entry object construction."""
-    try:
-        key = (os.path.abspath(path), os.stat(path).st_mtime_ns)
-    except OSError:
-        return pq.read_table(path)
-    t = _MANIFEST_TABLE_CACHE.get(key)
-    if t is None:
-        t = pq.read_table(path)
-        if len(_MANIFEST_TABLE_CACHE) >= _MANIFEST_TABLE_CACHE_MAX:
-            _MANIFEST_TABLE_CACHE.clear()
-        _MANIFEST_TABLE_CACHE[key] = t
-    return t
+    sig = file_signature([os.path.abspath(path)])
+    return _MANIFEST_TABLE_CACHE.get(
+        sig[0][:2] if sig else None, lambda: pq.read_table(path))
 
 
 def read_manifest(path: str, types_by_id: dict, ptypes: dict) -> list:

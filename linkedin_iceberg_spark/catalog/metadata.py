@@ -22,10 +22,10 @@ import json
 import os
 import time
 import uuid
-from collections import OrderedDict
 from dataclasses import dataclass, field, replace
 from typing import Optional
 
+from linkedin_iceberg_spark.catalog.cache import BoundedCache
 from linkedin_iceberg_spark.catalog.spec import PartitionSpec
 from linkedin_iceberg_spark.schema import Schema
 
@@ -281,22 +281,19 @@ class TableMetadata:
 # TableOperations: versioned-file I/O with CAS commit
 # ---------------------------------------------------------------------------
 
-# parsed-metadata cache keyed by (location, version) — version files are
-# immutable so entries never go stale WHILE a table exists; a drop +
-# recreate at the same location restarts versions at 1, so drop_table
-# must call invalidate_metadata_cache(location) or the stale v1 would be
-# served for the new table.  Bounded LRU so long-lived sessions touching
-# many tables don't grow without bound.
-_METADATA_CACHE: "OrderedDict[tuple, TableMetadata]" = OrderedDict()
+# parsed metadata by (location, version): version files are immutable, so
+# an entry never goes stale while its table exists; a drop + recreate at the
+# same location restarts versions at 1, so drop_table must call
+# invalidate_metadata_cache(location).
 _METADATA_CACHE_MAX = 64
+_METADATA_CACHE = BoundedCache(_METADATA_CACHE_MAX)
 
 
 def invalidate_metadata_cache(location: str) -> None:
     """Drop every cached version of the table at `location` (called on
     drop_table; a recreated table restarts version numbering)."""
     loc = os.path.abspath(location)
-    for key in [k for k in _METADATA_CACHE if k[0] == loc]:
-        del _METADATA_CACHE[key]
+    _METADATA_CACHE.drop(lambda key: key[0] == loc)
 
 
 class TableOperations:
@@ -355,18 +352,14 @@ class TableOperations:
         v = self.current_version()
         if v == 0:
             return None
-        key = (os.path.abspath(self.location), v)
-        md = _METADATA_CACHE.get(key)
-        if md is not None:
-            _METADATA_CACHE.move_to_end(key)
+
+        def parse() -> TableMetadata:
+            with open(self._version_path(v)) as fh:
+                md = TableMetadata.from_json(json.load(fh))
+            md._version = v  # type: ignore[attr-defined]
             return md
-        with open(self._version_path(v)) as fh:
-            md = TableMetadata.from_json(json.load(fh))
-        md._version = v  # type: ignore[attr-defined]
-        _METADATA_CACHE[key] = md
-        while len(_METADATA_CACHE) > _METADATA_CACHE_MAX:
-            _METADATA_CACHE.popitem(last=False)
-        return md
+        return _METADATA_CACHE.get(
+            (os.path.abspath(self.location), v), parse)
 
     def commit(self, base_version: int, metadata: TableMetadata) -> int:
         """CAS: succeeds only if nobody committed base_version+1 first.

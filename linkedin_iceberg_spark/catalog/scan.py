@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from linkedin_iceberg_spark.catalog import manifests as M
 from linkedin_iceberg_spark.catalog import plan_vectorized as PV
 from linkedin_iceberg_spark.catalog import stats_store as S
+from linkedin_iceberg_spark.catalog.cache import BoundedCache, file_signature
 from linkedin_iceberg_spark.catalog.metadata import TableMetadata
 from linkedin_iceberg_spark.expressions import (
     Evaluator,
@@ -1395,53 +1396,33 @@ def data_group_key(md: TableMetadata, data_file) -> tuple:
             import_base_path(md, data_file.file_path))
 
 
-# Resolved file-group relation memo: `spark.read.schema(...).load(paths)`
-# costs ~25 ms of py4j + relation resolution per call even with an explicit
-# schema (r12 profile: the largest single slice of every engine-table scan
-# build).  Engine data files are immutable by construction (CoW writers
-# always create new uuid-named files), and the key is belt-and-braces
-# anyway: session identity + format + basePath + read-schema JSON + the
-# exact (path, mtime, size) signature of every file in the group, so any
-# append/rewrite/out-of-band change is a different key.  A DataFrame is an
-# unexecuted plan handle — rows are re-scanned and re-decoded on every
-# execution; this caches relation METADATA only (ld()'s discipline).
-# Groups larger than _RELATION_MEMO_MAX_FILES skip the memo: the per-file
-# os.stat signature would scale with file count while the resolution cost
-# it saves stays constant.
-_RELATION_MEMO: dict = {}
-_RELATION_MEMO_MAX = 128
+# Resolved file-group relations (`spark.read.schema(...).load(paths)` costs
+# ~25 ms of py4j + relation resolution even with an explicit schema): engine
+# data files are immutable (writers always create new uuid-named files), the
+# key pins every file's signature, and a DataFrame is an unexecuted plan
+# handle.  Groups above _RELATION_MEMO_MAX_FILES skip the memo: the per-file
+# os.stat cost grows with the group while the saved resolution does not.
+_RELATION_MEMO = BoundedCache(max_entries=128)
 _RELATION_MEMO_MAX_FILES = 64
 
 
-def _load_file_group(spark: SparkSession, fmt: str, bp, schema_json: str,
+def load_file_group(spark: SparkSession, fmt: str, bp, schema,
                      group_paths: list) -> DataFrame:
+    """The one reader of a group of parquet/ORC files under an explicit
+    Spark ``schema`` (a StructType), memoized per exact file signature."""
     def build() -> DataFrame:
-        from pyspark.sql.types import StructType
-        reader = spark.read.schema(
-            StructType.fromJson(json.loads(schema_json))).format(fmt)
+        reader = spark.read.schema(schema).format(fmt)
         if bp is not None:
             # imported in place: partition columns live in the directory
             # names, not the files — Spark fills them from the paths
             reader = reader.option("basePath", bp)
         return reader.load(group_paths)
 
-    if len(group_paths) > _RELATION_MEMO_MAX_FILES:
-        return build()
-    try:
-        stats = [os.stat(p) for p in group_paths]
-        sig = tuple((p, st.st_mtime_ns, st.st_size)
-                    for p, st in zip(group_paths, stats))
-    except OSError:
-        return build()
-    key = (id(spark), spark.sparkContext.applicationId, fmt, bp,
-           schema_json, sig)
-    df = _RELATION_MEMO.get(key)
-    if df is None:
-        df = build()
-        if len(_RELATION_MEMO) >= _RELATION_MEMO_MAX:
-            _RELATION_MEMO.clear()
-        _RELATION_MEMO[key] = df
-    return df
+    sig = (file_signature(group_paths)
+           if len(group_paths) <= _RELATION_MEMO_MAX_FILES else None)
+    app = spark.sparkContext.applicationId
+    key = None if sig is None else (id(spark), app, fmt, bp, schema.json(), sig)
+    return _RELATION_MEMO.get(key, build, app)
 
 
 def read_files_as_current_schema(spark: SparkSession, md: TableMetadata,
@@ -1471,9 +1452,7 @@ def read_files_as_current_schema(spark: SparkSession, md: TableMetadata,
                 read_avro_files)
             df = read_avro_files(spark, group_paths, written)
         else:
-            df = _load_file_group(spark, fmt, bp,
-                                  json.dumps(written.to_spark().jsonValue(),
-                                             sort_keys=True),
+            df = load_file_group(spark, fmt, bp, written.to_spark(),
                                   group_paths)
         if sid != md.current_schema_id or bp is not None:
             df = df.select(*align_columns(written, current))

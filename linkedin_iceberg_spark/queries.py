@@ -20,6 +20,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from linkedin_iceberg_spark.catalog.cache import BoundedCache, file_signature
+
 _REGISTRY: dict = {}
 
 
@@ -30,19 +32,11 @@ def q(name: str, oracle: Optional[str] = None):
     return deco
 
 
-# Input-relation memo ((appId, path) -> base DataFrame).  `spark.read
-# .parquet` without a schema runs a footer-inference Spark JOB per call
-# (~120 ms of driver + job-wave latency, measured r11), and even with an
-# explicit schema each call re-resolves the relation (~37 ms of py4j +
-# listing).  Resolving each immutable input ONCE per session and reusing
-# the unanalyzed base plan removes that wave from every later query.
-# This caches input METADATA only — never rows, computed plans, or
-# results: a DataFrame is a plan handle, every query still analyzes,
-# optimizes, scans, decodes and computes from the parquet bytes on every
-# invocation.  At scale this is exactly the catalog's job (a table's
-# schema/file-index comes from the metastore, not a per-query footer
-# probe — `spark.table()` behaves the same way).
-_BASE_DF_CACHE: dict = {}
+# Input relations (`spark.read.parquet` without a schema runs a
+# footer-inference job, ~120 ms per call): the key pins the input's file
+# signature, and a DataFrame is an unexecuted plan handle, so every query
+# still scans and computes from the parquet bytes.
+_BASE_DF_CACHE = BoundedCache(max_entries=128)
 
 
 def ld(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -52,20 +46,11 @@ def ld(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # session (unlike ours, session.py) doesn't set it at build time.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # key on the SESSION identity (a DataFrame is bound to the SparkSession
-    # that created it — appId alone would hand a newSession() a plan that
-    # executes under the first session's conf) and the input's mtime (a
-    # same-session overwrite/regeneration of the file must not serve the
-    # stale cached file listing/schema).  One os.stat per call.
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    key = (id(spark), spark.sparkContext.applicationId, path, mtime)
-    df = _BASE_DF_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _BASE_DF_CACHE[key] = df
+    # keyed on the SESSION identity: a DataFrame is bound to the session
+    # that created it, and a newSession() shares the appId
+    app = spark.sparkContext.applicationId
+    df = _BASE_DF_CACHE.get((id(spark), app, path, file_signature([path])),
+                            lambda: spark.read.parquet(path), app)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos read as long: truncate to micros, matching the oracle's
         # CAST(ts AS TIMESTAMP)
