@@ -5,8 +5,9 @@ EqualityDeleteWriter, DeleteFileIndex.java:61-133 (sequence-number scoping).
 
 Representation:
   position delete file — parquet(file_path string, pos long)
-  equality delete file — parquet(<key columns by current names>) + the key
-                         field ids recorded in the manifest entry
+  equality delete file — parquet(<key columns, in the table's key types,
+                         named as in the schema it was written under>) +
+                         the key field ids recorded in the manifest entry
 
 Application is pure Spark (distributed, broadcast-friendly).  Sequence
 scoping happens at PLAN time: every data file's sequence number is known
@@ -22,8 +23,16 @@ Catalyst's plan deduplication into pathological re-analysis).
             index — Spark's parquet ``_metadata.row_index``, or the
             per-file row counter of the whole-file ORC/Avro readers
             (exact for every format since r10) — no shuffle, no window.
-  equality: left_anti join on the key columns (null-safe), delete side
-            broadcast.
+  equality: ONE null-safe left_anti join per ``equality_ids`` set: every
+            delete file of the group that shares the set is read in the
+            same relation.
+
+Building the read launches no Spark job: every delete file is read under
+an explicit schema — position files under POS_DELETE_SCHEMA, equality
+files under one built from their ``equality_ids`` and the schema they
+were written under — so no footer is inferred before the action.  Delete
+rows are not deduplicated on read: a duplicate row cannot change an
+anti-join, and the writer already wrote each key once.
 
 Both anti-joins broadcast the delete side only while its summed manifest
 record_count stays under BROADCAST_DELETE_ROW_LIMIT; past that the join
@@ -35,10 +44,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from linkedin_iceberg_spark.catalog import manifests as M
 
-POS_DELETE_SCHEMA = "file_path string, pos bigint"
+POS_DELETE_SCHEMA = T.StructType([T.StructField("file_path", T.StringType()),
+                                  T.StructField("pos", T.LongType())])
 
 # Attached delete rows are broadcast for the anti-join only below this
 # many rows (record counts come free from the manifest entries).  Above
@@ -103,6 +114,7 @@ def _read_group_with_positions(spark: SparkSession, md, schema_id: int,
     schema = md.schema
     written = md.schema_by_id(schema_id)
     paths = [f.file_path for f in gfiles]
+    meta = [F.col("_file"), F.col("_pos")]
     if fmt == "avro":
         from linkedin_iceberg_spark.sources.avro_spark import read_avro_files
         base = read_avro_files(spark, paths, written, with_file_col=True,
@@ -114,11 +126,41 @@ def _read_group_with_positions(spark: SparkSession, md, schema_id: int,
         base = read_orc_files(spark, paths, written, pconst)
     else:
         base = load_file_group(spark, fmt, base_path, written.to_spark(),
-                                paths) \
-            .withColumn("_file", F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:", "")) \
-            .withColumn("_pos", F.col("_metadata.row_index"))
-    return base.select(*align_columns(written, schema), "_file", "_pos")
+                               paths)
+        meta = [F.regexp_replace(F.col("_metadata.file_path"), "^file:", "")
+                .alias("_file"),
+                F.col("_metadata.row_index").alias("_pos")]
+    # same rule as read_files_as_current_schema: a group written under the
+    # current schema, not imported, is already read in current order
+    if schema_id == md.current_schema_id and base_path is None:
+        cols = schema.column_names()
+    else:
+        cols = align_columns(written, schema)
+    return base.select(*cols, *meta)
+
+
+def _equality_keys(spark: SparkSession, md, ids: tuple,
+                   files: list) -> DataFrame:
+    """The delete keys of every equality-delete file in ``files`` (all on
+    the key set ``ids``) as one relation with columns ``_k_<field id>``.
+    Each file is read under the names and types of the schema it was
+    written under, so a column renamed since still matches by id."""
+    from linkedin_iceberg_spark.catalog.scan import load_file_group
+    from linkedin_iceberg_spark.schema import type_to_spark
+    by_schema: dict = {}
+    for f in files:
+        by_schema.setdefault(f.schema_id, []).append(f.file_path)
+    out = None
+    for sid, paths in sorted(by_schema.items()):
+        written = md.schema_by_id(sid)
+        names = [written.name_for_id(i) for i in ids]
+        struct = T.StructType([
+            T.StructField(n, type_to_spark(written.find_type(i)), True)
+            for n, i in zip(names, ids)])
+        keys = load_file_group(spark, "parquet", None, struct, paths).select(
+            *[F.col(n).alias(f"_k_{i}") for n, i in zip(names, ids)])
+        out = keys if out is None else out.unionByName(keys)
+    return out
 
 
 def apply_deletes(table, tasks: list, df_ignored=None,
@@ -133,7 +175,8 @@ def apply_deletes(table, tasks: list, df_ignored=None,
     md = table.metadata
     schema = md.schema
 
-    from linkedin_iceberg_spark.catalog.scan import import_base_path
+    from linkedin_iceberg_spark.catalog.scan import (
+        import_base_path, load_file_group, read_files_as_current_schema)
 
     # group data files by (schema_id, format, base path, delete-file set)
     groups: dict = {}
@@ -151,56 +194,47 @@ def apply_deletes(table, tasks: list, df_ignored=None,
 
     parts = []
     for (schema_id, fmt, bp, dkey), gtasks in groups.items():
-        paths = [t.file.file_path for t in gtasks]
-        has_deletes = bool(dkey)
-        if not has_deletes and not keep_metadata:
-            # fast path: plain projected read, no metadata columns
-            from linkedin_iceberg_spark.catalog.scan import (
-                read_files_as_current_schema)
-            parts.append(read_files_as_current_schema(
-                spark, md, {(schema_id, fmt, bp): paths}))
-            continue
-        if not has_deletes:
-            parts.append(_read_group_with_positions(
-                spark, md, schema_id, [t.file for t in gtasks], fmt,
-                base_path=bp))
-            continue
-
-        data = _read_group_with_positions(spark, md, schema_id,
-                                          [t.file for t in gtasks], fmt,
-                                          base_path=bp)
-
-        pos_paths = [p for p in dkey
-                     if delete_meta[p].content == M.CONTENT_POSITION_DELETES]
-        if pos_paths:
-            pos_df = (spark.read.schema(POS_DELETE_SCHEMA)
-                      .parquet(*pos_paths)
-                      .withColumnRenamed("file_path", "_file")
-                      .withColumnRenamed("pos", "_pos").distinct())
-            n_pos = _total_records([delete_meta[p] for p in pos_paths])
-            data = data.join(_maybe_broadcast(pos_df, n_pos),
-                             on=["_file", "_pos"], how="left_anti")
-
+        gfiles = [t.file for t in gtasks]
+        pos_files, eq_sets = [], {}
         for p in dkey:
             f = delete_meta[p]
-            if f.content != M.CONTENT_EQUALITY_DELETES:
-                continue
-            key_names = [schema.name_for_id(i) for i in f.equality_ids]
-            # rename the delete side so the null-safe join is unambiguous
-            keys = spark.read.parquet(p).select(
-                *[F.col(k).alias(f"_k_{k}") for k in key_names]).distinct()
-            cond = [F.col(k).eqNullSafe(F.col(f"_k_{k}"))
-                    for k in key_names]
-            data = data.join(_maybe_broadcast(keys, _total_records([f])),
+            if f.content == M.CONTENT_POSITION_DELETES:
+                pos_files.append(f)
+            else:
+                eq_sets.setdefault(tuple(f.equality_ids), []).append(f)
+
+        # _file/_pos are read only where a caller or a join needs them
+        with_pos = keep_metadata or bool(pos_files)
+        if with_pos:
+            data = _read_group_with_positions(spark, md, schema_id, gfiles,
+                                              fmt, base_path=bp)
+        else:
+            data = read_files_as_current_schema(
+                spark, md, {(schema_id, fmt, bp):
+                            [f.file_path for f in gfiles]})
+
+        if pos_files:
+            pos_df = load_file_group(
+                spark, "parquet", None, POS_DELETE_SCHEMA,
+                [f.file_path for f in pos_files]).select(
+                    F.col("file_path").alias("_file"),
+                    F.col("pos").alias("_pos"))
+            data = data.join(
+                _maybe_broadcast(pos_df, _total_records(pos_files)),
+                on=["_file", "_pos"], how="left_anti")
+
+        for ids, files in eq_sets.items():
+            keys = _equality_keys(spark, md, ids, files)
+            cond = [F.col(schema.name_for_id(i)).eqNullSafe(F.col(f"_k_{i}"))
+                    for i in ids]
+            data = data.join(_maybe_broadcast(keys, _total_records(files)),
                              on=cond, how="left_anti")
 
-        cols = list(schema.column_names())
-        if keep_metadata:
-            cols += ["_file", "_pos"]
-        parts.append(data.select(*cols))
+        if with_pos and not keep_metadata:
+            data = data.select(*schema.column_names())
+        parts.append(data)
 
     if not parts:
-        from pyspark.sql import types as T
         fields = list(schema.to_spark().fields)
         if keep_metadata:
             fields += [T.StructField("_file", T.StringType(), True),

@@ -122,12 +122,48 @@ def row_delta(table, data_df: Optional[DataFrame] = None,
         delete_files += _write_delete_parquet(
             table, pos, M.CONTENT_POSITION_DELETES, [])
     if equality_delete_keys is not None:
-        if not key_cols:
-            key_cols = equality_delete_keys.columns
-        ids = [table.schema.id_for_name(c) for c in key_cols]
-        keys = equality_delete_keys.select(*key_cols).distinct()
-        delete_files += _write_delete_parquet(
-            table, keys, M.CONTENT_EQUALITY_DELETES, ids)
+        delete_files += _write_equality_deletes(
+            table, equality_delete_keys,
+            key_cols or equality_delete_keys.columns)
+    return _commit_delta(table, data_files, delete_files, extra_summary,
+                         seen_paths, conflict_fn)
+
+
+def _write_equality_deletes(table, keys: DataFrame, key_cols: list) -> list:
+    """Equality-delete files holding each distinct key of ``keys`` once,
+    every key column cast to the table's type and named as in the table
+    schema — the read side (deletes._equality_keys) reads them under
+    exactly that schema.  The cast follows the session's ANSI setting: a
+    key that does not fit the column raises rather than turning into a
+    NULL the null-safe anti-join would match."""
+    from pyspark.sql import functions as F
+
+    from linkedin_iceberg_spark.schema import type_to_spark
+    schema = table.schema
+    ids = _key_ids(table, key_cols)
+    typed = keys.select(*[
+        F.col(c).cast(type_to_spark(schema.find_type(i)))
+        .alias(schema.name_for_id(i)) for c, i in zip(key_cols, ids)])
+    return _write_delete_parquet(table, typed.distinct(),
+                                 M.CONTENT_EQUALITY_DELETES, ids)
+
+
+def _key_ids(table, key_cols: list) -> list:
+    """Field ids of ``key_cols``; ValueError naming any not in the schema."""
+    ids = [table.schema.id_for_name(c) for c in key_cols]
+    missing = [c for c, i in zip(key_cols, ids) if i is None]
+    if missing:
+        raise ValueError(f"equality-delete key columns not in the table "
+                         f"schema: {missing}")
+    return ids
+
+
+def _commit_delta(table, data_files: list, delete_files: list,
+                  extra_summary: Optional[dict] = None,
+                  seen_paths: Optional[set] = None,
+                  conflict_fn=None):
+    """Commit already-written data and delete files as one snapshot (the
+    row_delta contract for ``seen_paths``/``conflict_fn``)."""
     if not data_files and not delete_files:
         return table
 
@@ -361,19 +397,30 @@ def merge(table, source: DataFrame, key_cols: list,
         for p in parts[1:]:
             data_df = data_df.unionByName(p)
 
-    if by_source:
-        # clauses touch keys outside the source range: widen the guard
-        from linkedin_iceberg_spark.expressions import always_true, bind
-        seen = {e.data_file.file_path for e in table._live_entries()}
-        conflict = table._filter_conflict_fn(
-            bind(table.schema, always_true()))
-    else:
-        seen, conflict = _key_bounds_guard(table, source, key_cols,
-                                           pred=bounds_pred)
+    from linkedin_iceberg_spark.expressions import always_true
+    seen = {e.data_file.file_path for e in table._live_entries()}
+    # clauses that touch keys outside the source range widen the guard
+    # to the whole table
+    conflict = _key_range_conflict_fn(
+        table, always_true() if by_source else bounds_pred)
     return row_delta(table, data_df=data_df,
                      equality_delete_keys=affected, key_cols=key_cols,
                      extra_summary=extra_summary,
                      seen_paths=seen, conflict_fn=conflict)
+
+
+def _key_envelope(bounds: list):
+    """Unbound engine predicate ``lo <= k <= hi`` over (k, lo, hi) triples;
+    a key column with no non-NULL value (lo None) adds no conjunct, and
+    no conjunct at all folds to always_true."""
+    from functools import reduce
+
+    from linkedin_iceberg_spark.expressions import (always_true, and_,
+                                                    gt_eq, lt_eq)
+    conj = [p for k, lo, hi in bounds if lo is not None
+            for p in (gt_eq(k, lo), lt_eq(k, hi))]
+    return reduce(lambda a, b: and_(a, b), conj) if conj \
+        else always_true()
 
 
 def _source_key_bounds(source: DataFrame, key_cols: list):
@@ -382,52 +429,73 @@ def _source_key_bounds(source: DataFrame, key_cols: list):
     for source-only merges: a target row can only affect the merge by
     sharing a key with some source row, which puts every key column
     inside [min, max].  All-NULL / empty sources fold to always_true."""
-    from functools import reduce
-
     from pyspark.sql import functions as F
-
-    from linkedin_iceberg_spark.expressions import (always_true, and_,
-                                                    gt_eq, lt_eq)
 
     row = source.agg(*[f for k in key_cols
                        for f in (F.min(k).alias(f"_lo_{k}"),
                                  F.max(k).alias(f"_hi_{k}"))]).collect()[0]
-    conj = []
-    for k in key_cols:
-        lo, hi = row[f"_lo_{k}"], row[f"_hi_{k}"]
-        if lo is not None:
-            conj += [gt_eq(k, lo), lt_eq(k, hi)]
-    return reduce(lambda a, b: and_(a, b), conj) if conj \
-        else always_true()
+    return _key_envelope([(k, row[f"_lo_{k}"], row[f"_hi_{k}"])
+                          for k in key_cols])
 
 
-def _key_bounds_guard(table, source: DataFrame, key_cols: list,
-                      pred=None) -> tuple:
-    """(seen_paths, conflict_fn) for merge/upsert: a concurrent commit
-    conflicts only if it might touch the SOURCE KEY RANGE — a new data
-    file whose metrics overlap [min, max] of every key column (a new key
-    outside the range can change neither the matched set nor the
-    anti-join inserts), any new delete file, or removal of any file the
-    operation read.  One metadata-sized agg over the source computes the
-    bounds (ref: the scoped conflict detection of
-    BaseOverwriteFiles.java:76-129, applied to the RowDelta path);
-    callers that already computed them pass `pred` to avoid re-running
-    the agg."""
+def _written_key_bounds(data_files: list, key_cols: list, ids: list):
+    """The _source_key_bounds envelope derived from the column metrics of
+    the data files an upsert has just written, with no Spark job; None
+    when a file holding non-NULL keys lacks a bound on a key column
+    (metrics mode none/counts, ORC files, a key stored only in the
+    partition path), so the caller falls back to the aggregation.
+    Truncated string bounds stay valid: the lower bound is a prefix and
+    the upper bound is incremented (stats.truncate_upper)."""
+    bounds = []
+    for k, fid in zip(key_cols, ids):
+        lo = hi = None
+        for f in data_files:
+            nulls = (f.null_value_counts or {}).get(fid)
+            if not f.record_count or nulls == f.record_count:
+                continue  # no non-NULL key here: nothing to envelope
+            flo = (f.lower_bounds or {}).get(fid)
+            fhi = (f.upper_bounds or {}).get(fid)
+            if flo is None or fhi is None:
+                return None
+            lo = flo if lo is None or flo < lo else lo
+            hi = fhi if hi is None or fhi > hi else hi
+        bounds.append((k, lo, hi))
+    return _key_envelope(bounds)
+
+
+def _key_range_conflict_fn(table, pred):
+    """conflict_fn for merge/upsert: a concurrent commit conflicts only if
+    it might touch the key envelope ``pred`` — a new data file whose
+    metrics overlap [min, max] of every key column (a new key outside the
+    range can change neither the matched set nor the anti-join inserts)
+    or any new delete file; removal of a file the operation read is
+    caught through seen_paths (ref: the scoped conflict detection of
+    BaseOverwriteFiles.java:76-129, applied to the RowDelta path)."""
     from linkedin_iceberg_spark.expressions import bind
-
-    if pred is None:
-        pred = _source_key_bounds(source, key_cols)
-    seen = {e.data_file.file_path for e in table._live_entries()}
-    return seen, table._filter_conflict_fn(bind(table.schema, pred))
+    return table._filter_conflict_fn(bind(table.schema, pred))
 
 
 def upsert(table, df: DataFrame, key_cols: list,
            extra_summary: Optional[dict] = None):
     """MERGE-style upsert: one snapshot that equality-deletes the incoming
     keys and appends the new rows (ref: the RowDelta pattern the reference's
-    Flink CDC sink uses)."""
-    seen, conflict = _key_bounds_guard(table, df, key_cols)
-    return row_delta(table, data_df=df,
-                     equality_delete_keys=df.select(*key_cols),
-                     key_cols=key_cols, extra_summary=extra_summary,
-                     seen_paths=seen, conflict_fn=conflict)
+    Flink CDC sink uses).
+
+    The conflict guard is scoped to the source's key range, taken from
+    the lower/upper bounds of the data files this upsert has just written
+    — metrics the write collects anyway, so no extra pass over the
+    source.  Only when a written file lacks a bound on a key column
+    (metrics mode none/counts, ORC files, an identity-partition key) does
+    one min/max aggregation over the source (_source_key_bounds) supply
+    the range instead.  The files live before the write are the ones the
+    operation saw."""
+    ids = _key_ids(table, key_cols)  # an unknown key fails before writing
+    seen = {e.data_file.file_path for e in table._live_entries()}
+    data_files = table._write_data_files(df)
+    pred = _written_key_bounds(data_files, key_cols, ids)
+    if pred is None:
+        pred = _source_key_bounds(df, key_cols)
+    conflict = _key_range_conflict_fn(table, pred)
+    delete_files = _write_equality_deletes(table, df, key_cols)
+    return _commit_delta(table, data_files, delete_files, extra_summary,
+                         seen, conflict)

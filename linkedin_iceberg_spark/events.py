@@ -5,11 +5,13 @@ and BaseTableScan.java:209-210).
 Type-keyed static registry: register a callback per event class; the scan
 and commit paths notify.  Listeners run on the driver, synchronously, and
 must never raise into the data path — exceptions are swallowed (a
-misbehaving metrics hook must not fail a commit).
+misbehaving metrics hook must not fail a commit), and each one is counted
+in ``listener_failures`` so a broken hook is not invisible.
 """
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
 
@@ -35,6 +37,11 @@ class CreateSnapshotEvent:
 
 _listeners: dict = {}
 
+# listener exceptions swallowed by notify_all since import (commits may
+# notify from several threads, hence the lock)
+listener_failures = 0
+_failures_lock = threading.Lock()
+
 
 def register(event_type: type, listener: Callable) -> None:
     """Listeners.register analog: subscribe `listener(event)` to events of
@@ -51,8 +58,11 @@ def unregister(event_type: type, listener: Callable) -> None:
 def notify_all(event: Any) -> None:
     """Listeners.notifyAll analog (exact-type dispatch, like the Java map
     keyed by event.getClass())."""
+    global listener_failures
     for listener in list(_listeners.get(type(event), ())):
         try:
             listener(event)
         except Exception:
-            pass  # hooks must never break the scan/commit path
+            # hooks must never break the scan/commit path
+            with _failures_lock:
+                listener_failures += 1

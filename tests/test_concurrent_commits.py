@@ -208,6 +208,77 @@ def test_merge_accepts_concurrent_append_outside_key_range(catalog, spark):
     assert t.to_df().filter("k >= 900").count() == 20  # rival intact
 
 
+def _spy_source_key_bounds(monkeypatch):
+    """Record each call of the upsert guard's aggregation fallback."""
+    from linkedin_iceberg_spark.catalog import row_delta as RD
+    calls = []
+    orig = RD._source_key_bounds
+
+    def spy(source, key_cols):
+        calls.append(key_cols)
+        return orig(source, key_cols)
+    monkeypatch.setattr(RD, "_source_key_bounds", spy)
+    return calls
+
+
+def test_upsert_rejects_concurrent_append_in_key_range(catalog, spark,
+                                                       monkeypatch):
+    catalog.create_table("db.up", _df(spark, 0, 1))
+    t1 = catalog.load_table("db.up")
+    t1.append(_df(spark, 0, 300).orderBy("k"))
+    t1 = catalog.load_table("db.up")
+    t2 = catalog.load_table("db.up")
+    aggs = _spy_source_key_bounds(monkeypatch)
+
+    src = _df(spark, 100, 200).withColumn("v", F.lit(-1).cast("long"))
+    # the key range comes from the written files' bounds: [100, 199]
+    _hook_refresh(t1, lambda: t2.append(_df(spark, 150, 151).orderBy("k")))
+    with pytest.raises(ValidationException, match="key range"):
+        t1.upsert(src, ["k"])
+    assert aggs == []  # no aggregation over the source
+    t = catalog.load_table("db.up")
+    assert t.to_df().count() == 301  # rival landed, upsert did not
+
+
+def test_upsert_accepts_concurrent_append_outside_key_range(catalog, spark,
+                                                            monkeypatch):
+    catalog.create_table("db.up2", _df(spark, 0, 1))
+    t1 = catalog.load_table("db.up2")
+    t1.append(_df(spark, 0, 300).orderBy("k"))
+    t1 = catalog.load_table("db.up2")
+    t2 = catalog.load_table("db.up2")
+    aggs = _spy_source_key_bounds(monkeypatch)
+
+    src = _df(spark, 100, 200).withColumn("v", F.lit(-1).cast("long"))
+    _hook_refresh(t1, lambda: t2.append(_df(spark, 900, 920).orderBy("k")))
+    t1.upsert(src, ["k"])
+    assert aggs == []
+    t = catalog.load_table("db.up2")
+    assert t.to_df().count() == 320
+    assert t.to_df().filter("k >= 100 and k < 200 and v != -1").count() == 0
+    assert t.to_df().filter("k >= 900").count() == 20  # rival intact
+
+
+def test_upsert_without_key_bounds_falls_back_and_rejects(catalog, spark,
+                                                          monkeypatch):
+    """Metrics mode `counts` writes no bounds: the guard falls back to the
+    source aggregation and still rejects an in-range rival."""
+    catalog.create_table("db.up3", _df(spark, 0, 1), properties={
+        "write.metadata.metrics.default": "counts"})
+    t1 = catalog.load_table("db.up3")
+    t1.append(_df(spark, 0, 300).orderBy("k"))
+    t1 = catalog.load_table("db.up3")
+    t2 = catalog.load_table("db.up3")
+    aggs = _spy_source_key_bounds(monkeypatch)
+
+    src = _df(spark, 100, 200).withColumn("v", F.lit(-1).cast("long"))
+    _hook_refresh(t1, lambda: t2.append(_df(spark, 150, 151).orderBy("k")))
+    with pytest.raises(ValidationException, match="key range"):
+        t1.upsert(src, ["k"])
+    assert aggs == [["k"]]
+    assert catalog.load_table("db.up3").to_df().count() == 301
+
+
 def test_compaction_merges_with_disjoint_concurrent_delete_file(catalog,
                                                                 spark):
     """A concurrent eq-delete whose key bounds cannot touch the

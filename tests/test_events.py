@@ -40,3 +40,22 @@ def test_listener_errors_do_not_break_commits(catalog, spark, sf_dir):
         assert t.to_df().count() == 10
     finally:
         EV._listeners.clear()
+
+
+def test_swallowed_listener_errors_are_counted():
+    seen = []
+
+    def bad(_e):
+        raise RuntimeError("boom")
+
+    EV.register(EV.ScanEvent, bad)
+    EV.register(EV.ScanEvent, seen.append)
+    before = EV.listener_failures
+    try:
+        event = EV.ScanEvent("db.t", None, None, None)
+        EV.notify_all(event)
+        EV.notify_all(event)
+    finally:
+        EV._listeners.clear()
+    assert EV.listener_failures == before + 2
+    assert seen == [event, event]  # a failing hook does not stop the next
